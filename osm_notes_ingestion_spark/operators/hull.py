@@ -137,7 +137,9 @@ def merge_hulls(
     points) — the batch, never the corpus, is re-processed. Keys absent
     from the delta pass through untouched (semi/anti-join split on the
     delta's key set, broadcast-sized by construction); incremental ≡
-    full-recompute is pinned in tests/test_hull.py.
+    full-recompute is pinned in tests/test_hull.py. The split is
+    null-safe: a null key is one more key (a plain equi-join never
+    matches it, so every merge would add another null-key hull).
 
     Hulls only grow: point DELETION is not expressible (a hull is not
     an invertible sketch) — the same contract as the reference's
@@ -148,9 +150,10 @@ def merge_hulls(
     same merge shape as merge_tile_counts and the streaming cluster
     store's generation fold.
     """
-    dkeys = delta_points.select(F.col(key_col).cast("long").alias("key")).distinct()
+    dkeys = delta_points.select(F.col(key_col).cast("long").alias("_dkey")).distinct()
+    in_delta = F.col("key").eqNullSafe(F.col("_dkey"))
     old_pts = (
-        existing.join(dkeys, "key", "left_semi")
+        existing.join(dkeys, in_delta, "left_semi")
         .select("key", F.explode("hull").alias("v"))
         .select(
             "key",
@@ -168,4 +171,4 @@ def merge_hulls(
     updated = convex_hull(
         old_pts.unionByName(new_pts), key_col="key", lat_col="lat", lon_col="lon", salt=salt
     )
-    return existing.join(dkeys, "key", "left_anti").unionByName(updated)
+    return existing.join(dkeys, in_delta, "left_anti").unionByName(updated)

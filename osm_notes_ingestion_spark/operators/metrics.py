@@ -24,6 +24,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.store import local_path
+
 
 def partition_lineage(df: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
     """→ (partition_id, [extra_keys...], n_rows): which partition produced
@@ -41,9 +43,9 @@ class MetricsLog:
     the engine twin of the reference's logs/tries/data_gaps tables."""
 
     def __init__(self, root: str):
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-        self.manifest = os.path.join(root, "runs.jsonl")
+        self.root = local_path(root, "MetricsLog")
+        os.makedirs(self.root, exist_ok=True)
+        self.manifest = os.path.join(self.root, "runs.jsonl")
 
     def log_stage(self, run_id: str, stage: str, df_metrics: DataFrame) -> None:
         path = os.path.join(self.root, f"{run_id}-{stage}")

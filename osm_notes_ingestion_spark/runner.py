@@ -135,6 +135,12 @@ def main(argv: list[str] | None = None) -> None:
     from .sources.checkpoint import SnapshotStore, resume_assignments
     from .sources.polygons import prep_polygons
     from .sources.synth import pages_df, world_polygons
+    from .streaming.store import _fs_and_path, local_path
+
+    run_id = f"{args.job}-{uuid.uuid4().hex[:8]}"
+    # first: refuses an --output the metrics log cannot write to before
+    # any Spark work
+    mlog = MetricsLog(f"{args.output}/metrics")
 
     # spark-submit owns the session config (master/executors); only fill
     # engine-required settings if absent
@@ -144,9 +150,6 @@ def main(argv: list[str] | None = None) -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
-
-    run_id = f"{args.job}-{uuid.uuid4().hex[:8]}"
-    mlog = MetricsLog(f"{args.output}/metrics")
     t0 = time.perf_counter()
 
     pages = pages_df(spark, args.sf_dir, fanout=args.fanout)
@@ -216,7 +219,7 @@ def main(argv: list[str] | None = None) -> None:
         pts = ext.where("has_coords AND NOT rejected")
         out_dir = f"{args.output}/zordered"
         write_zordered(pts, out_dir, n_files=args.zorder_files)
-        files, rgs = bbox_file_stats(out_dir)
+        files, rgs = bbox_file_stats(local_path(out_dir, "--job zorder"))
         probe = dict(lat_min=40.0, lat_max=50.0, lon_min=0.0, lon_max=10.0)
         mlog.log_counters(
             run_id,
@@ -336,11 +339,9 @@ def main(argv: list[str] | None = None) -> None:
         # overwrite), so clear both before streaming. Hadoop FS delete,
         # not shutil: --output may be on HDFS/S3 (store reads already go
         # through the Hadoop FS API)
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
         for p in (src, store):
-            hp = jvm.org.apache.hadoop.fs.Path(p)
-            hp.getFileSystem(hconf).delete(hp, True)
+            fs, hp = _fs_and_path(spark, p)
+            fs.delete(hp, True)
         docs.repartition(4).write.mode("overwrite").parquet(src)
         q = streaming_near_dups(
             spark,
@@ -369,9 +370,7 @@ def main(argv: list[str] | None = None) -> None:
         # staging on a future --resume) never creates {store}/pairs — a
         # bare read would raise PATH_NOT_FOUND, while the labels-is-None
         # handling below shows the zero-batch case is meant to work.
-        # Same fs.exists guard _store applies to every other store read.
-        from .streaming.dedup import _fs_and_path
-
+        # Same fs.exists guard the store reader applies.
         fs, pairs_path = _fs_and_path(spark, f"{store}/pairs")
         if fs.exists(pairs_path):
             pairs_by_batch = spark.read.option("basePath", f"{store}/pairs").parquet(
@@ -445,12 +444,19 @@ def main(argv: list[str] | None = None) -> None:
 
         ev = spark.read.parquet(f"{args.sf_dir}/events.parquet").select("user_id", "ts")
         src = f"{args.output}/stream_src"
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
         for p in (src, f"{args.output}/sessions", f"{args.output}/ckpt"):
-            hp = jvm.org.apache.hadoop.fs.Path(p)
-            hp.getFileSystem(hconf).delete(hp, True)
-        ev.repartition(4).write.mode("overwrite").parquet(src)
+            fs, hp = _fs_and_path(spark, p)
+            fs.delete(hp, True)
+        # stage time-ordered slices, one file each (part-NNNNN names sort
+        # in range order), with mtimes in the same order: the file source
+        # reads files by mtime, and with the 0 s watermark delay an event
+        # no newer than the newest event already read is dropped as late
+        ev.repartitionByRange(4, "ts").write.mode("overwrite").parquet(src)
+        fs, hsrc = _fs_and_path(spark, src)
+        names = sorted(st.getPath().getName() for st in fs.listStatus(hsrc))
+        now_ms = int(time.time() * 1000)
+        for i, name in enumerate(n for n in names if n.startswith("part-")):
+            fs.setTimes(hsrc.suffix(f"/{name}"), now_ms + 1000 * i, -1)
         stream = streaming_session_stats(
             spark, src, ev.schema, gap_s=args.session_gap_s, max_files_per_trigger=1
         )
@@ -465,10 +471,18 @@ def main(argv: list[str] | None = None) -> None:
         q.awaitTermination()
         emitted = spark.read.parquet(f"{args.output}/sessions").count()
         total = session_stats(ev, args.session_gap_s).count()
+        n_late = sum(
+            op.numRowsDroppedByWatermark for p in q.recentProgress for op in p.stateOperators
+        )
         mlog.log_counters(
             run_id,
             "stream_sessions",
-            {"n_emitted": emitted, "n_batch_total": total, "n_in_flight": total - emitted},
+            {
+                "n_emitted": emitted,
+                "n_batch_total": total,
+                "n_in_flight": total - emitted,
+                "n_late_dropped": n_late,
+            },
         )
     elif args.job == "curate":
         # the full training-data funnel: exact dedup → paragraph dedup →
@@ -570,11 +584,9 @@ def main(argv: list[str] | None = None) -> None:
         pts = ext.where("has_coords AND NOT rejected").select("id", "lat_e6", "lon_e6")
         src = f"{args.output}/stream_src"
         store = f"{args.output}/cluster_store"
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
         for p in (src, store):
-            hp = jvm.org.apache.hadoop.fs.Path(p)
-            hp.getFileSystem(hconf).delete(hp, True)
+            fs, hp = _fs_and_path(spark, p)
+            fs.delete(hp, True)
         pts.repartition(4).write.mode("overwrite").parquet(src)
         q = streaming_clusters(
             spark, src, pts.schema, store,

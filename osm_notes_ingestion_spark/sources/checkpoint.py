@@ -32,13 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.spatial_join import assign_countries
+from ..streaming.store import local_path
 
 
 class SnapshotStore:
     def __init__(self, root: str):
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-        self.manifest = os.path.join(root, "manifest.jsonl")
+        self.root = local_path(root, "SnapshotStore")
+        os.makedirs(self.root, exist_ok=True)
+        self.manifest = os.path.join(self.root, "manifest.jsonl")
 
     def write_snapshot(self, df: DataFrame, kind: str = "assignments") -> str:
         snap_id = f"{kind}-{uuid.uuid4().hex[:12]}"

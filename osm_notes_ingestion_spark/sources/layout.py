@@ -119,6 +119,7 @@ def bbox_file_stats(path: str, lat_col: str = "lat", lon_col: str = "lon"):
     on an object store the scan planner itself does this pruning — use
     the engine's scan metrics there instead of this helper.
     """
+    import math
     import os
 
     import pyarrow.parquet as pq
@@ -139,11 +140,15 @@ def bbox_file_stats(path: str, lat_col: str = "lat", lon_col: str = "lon"):
             lo = g.column(idx[lon_col]).statistics
             env = {
                 "file": fname,
-                "lat_min": la.min,
-                "lat_max": la.max,
-                "lon_min": lo.min,
-                "lon_max": lo.max,
+                "lat_min": -math.inf,
+                "lat_max": math.inf,
+                "lon_min": -math.inf,
+                "lon_max": math.inf,
             }
+            # a row group written without min/max statistics cannot be
+            # pruned: it keeps the whole-plane envelope
+            if all(st is not None and st.has_min_max for st in (la, lo)):
+                env.update(lat_min=la.min, lat_max=la.max, lon_min=lo.min, lon_max=lo.max)
             rowgroups.append(env)
             if fenv is None:
                 fenv = dict(env)

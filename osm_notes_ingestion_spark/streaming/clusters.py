@@ -30,6 +30,11 @@ Stores under `root/`:
   borders = all adds whose id is not in the current core set. No
   delete markers needed.
 
+The bucketed sub-stores (points, nbinc, border) follow streaming/
+store.py's layout: its layout check (constant B, no leftover compaction
+marker), its pruned reader (a replayed batch N hides batch_id ≥ N at the
+path level) and its two-phase generation compaction.
+
 Exactly-once: every writer lands under its batch_id partition
 (idempotent foreachBatch — a replayed batch overwrites its own rows);
 labels/gen=N is keyed by batch id too, so a replay rewrites the same
@@ -45,13 +50,22 @@ demote cores — out of contract, same as the batch increment).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.clustering import _eps_pairs, _indexed, _level_for_eps
 from ..operators.components import incremental_components
+from .store import (
+    _bkt,
+    _fs_and_path,
+    _pruned_store,
+    _touched_buckets,
+    check_layout,
+    compact,
+    partition_ids,
+    read_all,
+    write_leaves,
+)
 
 _EMPTY_LABELS = "node long, comp long"
 
@@ -69,10 +83,6 @@ def _cell_col(level: int):
         + y * F.lit(1 << Y_SHIFT).cast("long")
         + x
     )
-
-
-def _bkt(cell_col, n_buckets: int):
-    return F.pmod(F.xxhash64(cell_col), F.lit(n_buckets)).cast("int")
 
 
 def _ring_cells(level: int, k: int):
@@ -102,58 +112,25 @@ def _ring_cells(level: int, k: int):
     )
 
 
-def _read_buckets(
-    spark: SparkSession, root: str, buckets: list[int], schema: str, before_batch: int
-) -> DataFrame:
-    """Read only the touched bkt= dirs, EXCLUDING rows of batch ids ≥
-    before_batch — a replayed batch must not see its own crashed write
-    as prior state (the dedup store's in-flight-exclusion contract)."""
-    parts = [f"{root}/bkt={b}" for b in buckets if os.path.exists(f"{root}/bkt={b}")]
-    if not parts:
-        return spark.createDataFrame([], schema + ", batch_id long")
-    # basePath keeps partition discovery rooted at the store even though
-    # only the touched bkt= dirs are listed/read
-    return (
-        spark.read.option("basePath", root).parquet(*parts).where(F.col("batch_id") < before_batch)
-    )
-
-
-def _latest_gen(root: str, before_batch: int | None = None) -> int | None:
-    """Newest label generation, optionally only among gens < before_batch
-    (replay: a batch must seed from its PREDECESSOR's labels, never from
-    its own crashed generation)."""
-    if not os.path.exists(root):
-        return None
-    gens = [int(d.split("=")[1]) for d in os.listdir(root) if d.startswith("gen=")]
+def _labels(spark: SparkSession, store_root: str, before_batch: int | None = None) -> DataFrame:
+    """Core labels of the newest generation, optionally only among gens
+    < before_batch (replay: a batch must seed from its PREDECESSOR's
+    labels, never from its own crashed generation)."""
+    gens = partition_ids(spark, f"{store_root}/labels", "gen")
     if before_batch is not None:
-        gens = [g for g in gens if g < before_batch]
-    return max(gens) if gens else None
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Store dirs can legitimately hold no data files (an all-core batch
-    writes zero border rows but partitionBy still creates the root) —
-    fall back to an empty frame instead of failing schema inference."""
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema)
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return spark.createDataFrame([], schema)
+        gens = {g for g in gens if g < before_batch}
+    if not gens:
+        return spark.createDataFrame([], _EMPTY_LABELS)
+    return spark.read.parquet(f"{store_root}/labels/gen={max(gens)}")
 
 
 def cluster_labels(spark: SparkSession, store_root: str) -> DataFrame:
     """(id, cluster, role) from the settled stores — cores from the
     latest label generation, borders resolved by a label join (adds
     whose id is not core), noise = everything else."""
-    gen = _latest_gen(f"{store_root}/labels")
-    labels = (
-        spark.read.parquet(f"{store_root}/labels/gen={gen}")
-        if gen is not None
-        else spark.createDataFrame([], _EMPTY_LABELS)
-    )
-    points = _read_or_empty(spark, f"{store_root}/points", "id long, plat long, plon long")
-    border = _read_or_empty(spark, f"{store_root}/border", "id long, core_id long")
+    labels = _labels(spark, store_root)
+    points = read_all(spark, f"{store_root}/points", "id long, plat long, plon long")
+    border = read_all(spark, f"{store_root}/border", "id long, core_id long")
     core_out = labels.select(F.col("node").alias("id"), F.col("comp").alias("cluster"), F.lit("core").alias("role"))
     border_out = (
         border.join(labels.select(F.col("node").alias("id")), "id", "left_anti")  # promoted ids drop out
@@ -187,12 +164,7 @@ def process_cluster_batch(
     READS are pruned to the buckets of the batch's ring-2 cells; the
     distance work is new×slice plus promoted neighbourhoods, exactly the
     batch increment's contract."""
-    if os.path.exists(f"{store_root}/_compact"):
-        raise RuntimeError(
-            f"{store_root}: compaction markers present — a crashed "
-            "compact_cluster_store may have left folded rows twice; run "
-            "compact_cluster_store() to recover before streaming resumes"
-        )
+    check_layout(spark, store_root, n_buckets)
     level = _level_for_eps(int(eps_e6))
     eps2 = int(eps_e6) * int(eps_e6)
 
@@ -202,25 +174,18 @@ def process_cluster_batch(
     # touched buckets from the batch's OWN ring-2 cells (driver collect of
     # ≤ n_buckets small ints — the dedup store's contract)
     ring2 = new.select(F.explode(_ring_cells(level, 2)).alias("cell"))
-    touched = sorted(
-        r["b"] for r in ring2.select(_bkt(F.col("cell"), n_buckets).alias("b")).distinct().collect()
-    )
+    touched = _touched_buckets(ring2, "cell", n_buckets)
 
-    old = _read_buckets(
-        spark, f"{store_root}/points", touched, "id long, plat long, plon long", batch_id
+    old = _pruned_store(
+        spark, f"{store_root}/points", "id long, plat long, plon long", touched, batch_id
     )
     old = _indexed(old, level, "id", "plat", "plon").cache()
-    inc_hist = _read_buckets(
-        spark, f"{store_root}/nbinc", touched, "id long, cell long, inc long", batch_id
+    inc_hist = _pruned_store(
+        spark, f"{store_root}/nbinc", "id long, cell long, inc long", touched, batch_id
     )
     old_nb = inc_hist.groupBy("id").agg(F.sum("inc").alias("n_nb"))
 
-    gen = _latest_gen(f"{store_root}/labels", before_batch=batch_id)
-    prior_labels = (
-        spark.read.parquet(f"{store_root}/labels/gen={gen}")
-        if gen is not None
-        else spark.createDataFrame([], _EMPTY_LABELS)
-    )
+    prior_labels = _labels(spark, store_root, before_batch=batch_id)
 
     pairs_nn = _eps_pairs(new, new, level, eps2)
     pairs_no = _eps_pairs(new, old, level, eps2)
@@ -239,7 +204,7 @@ def process_cluster_batch(
         old.select("id", "plat", "plon").join(inc_old, "id").select("id", "inc", "plat", "plon")
         .unionByName(new_inc)
         .withColumn("cell", cell)
-        .select("id", "cell", "inc", _bkt(F.col("cell"), n_buckets).alias("bkt"), F.lit(batch_id).alias("batch_id"))
+        .select("id", "cell", "inc", _bkt("cell", n_buckets).alias("bkt"))
     )
 
     # --- core sets
@@ -295,38 +260,17 @@ def process_cluster_batch(
     border_rows = (
         add_edges.join(new.select("id", "plat", "plon").unionByName(old.select("id", "plat", "plon")), "id")
         .withColumn("cell", cell)
-        .select("id", "core_id", _bkt(F.col("cell"), n_buckets).alias("bkt"), F.lit(batch_id).alias("batch_id"))
+        .select("id", "core_id", _bkt("cell", n_buckets).alias("bkt"))
     )
 
-    # --- writes, all keyed by batch_id (idempotent on replay). The
-    # overwrite mode rides on each WRITE as an option, NOT session conf:
-    # inside streaming foreachBatch the batch executes on a CLONED
-    # session whose conf was snapshotted at stream start, so a runtime
-    # spark.conf.set never reaches it — with the session default
-    # (static) a partitioned overwrite then wipes every PRIOR batch's
-    # partitions (observed: only the last micro-batch's points
-    # survived the runner's stream; the direct-call tests never clone).
-    (
-        new.select("id", "plat", "plon")
-        .withColumn("cell", cell)
-        .select("id", "plat", "plon", _bkt(F.col("cell"), n_buckets).alias("bkt"), F.lit(batch_id).alias("batch_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bkt", "batch_id")
-        .parquet(f"{store_root}/points")
+    # --- writes, all keyed by batch_id (idempotent on replay)
+    write_leaves(
+        new.select("id", "plat", "plon").withColumn("bkt", _bkt(cell, n_buckets)),
+        f"{store_root}/points",
+        batch_id,
     )
-    (
-        inc_rows.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bkt", "batch_id")
-        .parquet(f"{store_root}/nbinc")
-    )
-    (
-        border_rows.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bkt", "batch_id")
-        .parquet(f"{store_root}/border")
-    )
+    write_leaves(inc_rows, f"{store_root}/nbinc", batch_id)
+    write_leaves(border_rows, f"{store_root}/border", batch_id)
     labels2.write.mode("overwrite").parquet(f"{store_root}/labels/gen={batch_id}")
     new.unpersist()
     old.unpersist()
@@ -358,52 +302,20 @@ def streaming_clusters(
                 spark, b, bid, store_root, eps_e6, min_pts, n_buckets=n_buckets, **kwargs
             )
         )
-        .option("checkpointLocation", os.path.join(store_root, "_stream_checkpoint"))
+        .option("checkpointLocation", f"{store_root}/_stream_checkpoint")
         .trigger(availableNow=True)
         .start()
     )
-
-
-# --------------------------------------------------------- store compaction
-
-_CLUSTER_SUBS = ("points", "nbinc", "border")
-
-
-def _cdelete_batch_dirs(fs, root, ids: set[int]) -> None:
-    for sub in _CLUSTER_SUBS:
-        sroot = root.suffix(f"/{sub}")
-        if not fs.exists(sroot):
-            continue
-        for bk in fs.listStatus(sroot):
-            if not bk.getPath().getName().startswith("bkt="):
-                continue
-            for i in ids:
-                fs.delete(bk.getPath().suffix(f"/batch_id={int(i)}"), True)
-
-
-def _cstore_batch_ids(fs, root) -> set[int]:
-    ids: set[int] = set()
-    if not fs.exists(root):
-        return ids
-    for bk in fs.listStatus(root):
-        if not bk.getPath().getName().startswith("bkt="):
-            continue
-        for st in fs.listStatus(bk.getPath()):
-            name = st.getPath().getName()
-            if name.startswith("batch_id="):
-                ids.add(int(name.split("=", 1)[1]))
-    return ids
 
 
 def compact_cluster_store(
     spark: SparkSession, store_root: str, keep_batches: int = 1
 ) -> int:
     """Fold settled batches of the points/nbinc/border stores into one
-    consolidated GENERATION (batch_id = -g), the dedup store's contract
-    (streaming/dedup.compact_store) applied to the cluster stores — a
-    bucket's child count stays ~(1 + keep_batches) instead of growing
-    one dir per micro-batch forever. Returns the new generation number
-    (positive), or 0 if nothing folded.
+    consolidated generation each (streaming/store.compact: contract,
+    crash recovery) — a bucket's child count stays ~(1 + keep_batches)
+    instead of growing one dir per micro-batch forever. Returns the new
+    generation number (positive), or 0 if nothing folded.
 
     Beyond concatenation, two folds genuinely SHRINK state:
     - nbinc: increments SUM into one row per (id, cell) — a point
@@ -412,96 +324,24 @@ def compact_cluster_store(
       status is monotone under insertions, so a promoted point can
       never need its border edges again), and survivors dedup.
 
-    Label generations older than the newest two are pruned in the same
-    pass (replay needs the predecessor generation only).
+    Label generations older than the newest two are pruned afterwards
+    (replay needs the predecessor generation only)."""
+    core = _labels(spark, store_root).select(F.col("node").alias("id"))
 
-    Run ONLY while the stream is stopped, keep_batches ≥ 1 (replay
-    exclusion needs the newest batches path-excludable; generations,
-    batch_id < 0, always pass `batch_id < current`). Crash safety =
-    dedup's two-phase empty-marker protocol: gen=/keep= markers before
-    any write, committed after all writes, recovery rolls back (no
-    committed — partial generation dropped, sources intact) or forward
-    (committed — finish the deletes). process_cluster_batch refuses to
-    run while markers exist."""
-    if keep_batches < 1:
-        raise ValueError("keep_batches must be ≥ 1 (replay exclusion contract)")
-    from .dedup import _fs_and_path
+    def sum_increments(df: DataFrame) -> DataFrame:
+        return df.groupBy("bkt", "id", "cell").agg(F.sum("inc").alias("inc"))
 
-    fs, root = _fs_and_path(spark, store_root)
-    marker_dir = root.suffix("/_compact")
+    def drop_dead_borders(df: DataFrame) -> DataFrame:
+        # monotone-core argument: once core, never border again
+        return df.join(core, "id", "left_anti").select("bkt", "id", "core_id").distinct()
 
-    def _fold_set(exclude_gen: int | None, keep: int) -> set[int]:
-        all_ids: set[int] = set()
-        for sub in _CLUSTER_SUBS:
-            all_ids |= _cstore_batch_ids(fs, root.suffix(f"/{sub}"))
-        stream_ids = sorted(i for i in all_ids if i >= 0)
-        gens = {i for i in all_ids if i < 0} - {exclude_gen}
-        return gens | set(stream_ids[: max(0, len(stream_ids) - keep)])
-
-    if fs.exists(marker_dir):
-        names = {st.getPath().getName() for st in fs.listStatus(marker_dir)}
-        stale_gen = next((int(n.split("=", 1)[1]) for n in names if n.startswith("gen=")), None)
-        stale_keep = next((int(n.split("=", 1)[1]) for n in names if n.startswith("keep=")), None)
-        if "committed" in names and stale_gen is not None and stale_keep is not None:
-            _cdelete_batch_dirs(fs, root, _fold_set(stale_gen, stale_keep))
-        elif stale_gen is not None:
-            _cdelete_batch_dirs(fs, root, {stale_gen})
-        fs.delete(marker_dir, True)
-
-    fold = _fold_set(None, keep_batches)
-    gen_only = {i for i in fold if i < 0}
-    if not fold or (fold == gen_only and len(gen_only) <= 1):
-        return 0
-    new_gen = min(gen_only, default=0) - 1
-
-    fs.mkdirs(marker_dir.suffix(f"/gen={new_gen}"))
-    fs.mkdirs(marker_dir.suffix(f"/keep={int(keep_batches)}"))
-    fold_pred = F.col("batch_id").isin([int(i) for i in fold])
-
-    gen = _latest_gen(f"{store_root}/labels")
-    core = (
-        spark.read.parquet(f"{store_root}/labels/gen={gen}").select(F.col("node").alias("id"))
-        if gen is not None
-        else spark.createDataFrame([], "id long")
+    gen = compact(
+        spark,
+        store_root,
+        {"points": lambda df: df, "nbinc": sum_increments, "border": drop_dead_borders},
+        keep_batches,
     )
-
-    for sub in _CLUSTER_SUBS:
-        sroot = root.suffix(f"/{sub}")
-        # a store root can exist with zero bkt= children (a stream whose
-        # batches produced no rows of this kind writes only _SUCCESS) —
-        # nothing to fold, and a bare read would fail schema inference
-        if not fs.exists(sroot) or not any(
-            st.getPath().getName().startswith("bkt=") for st in fs.listStatus(sroot)
-        ):
-            continue
-        df = (
-            spark.read.option("basePath", sroot.toString())
-            .parquet(sroot.toString())
-            .where(fold_pred)
-        )
-        if sub == "nbinc":
-            df = df.groupBy("bkt", "id", "cell").agg(F.sum("inc").alias("inc"))
-        elif sub == "border":
-            # monotone-core argument: once core, never border again
-            df = df.join(core, "id", "left_anti").select("bkt", "id", "core_id").distinct()
-        df = df.withColumn("batch_id", F.lit(int(new_gen)))
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bkt", "batch_id")
-            .parquet(sroot.toString())
-        )
-    fs.mkdirs(marker_dir.suffix("/committed"))
-    _cdelete_batch_dirs(fs, root, fold)
-    # prune stale label generations (keep the newest two)
-    lroot = root.suffix("/labels")
-    if fs.exists(lroot):
-        gens = sorted(
-            int(st.getPath().getName().split("=", 1)[1])
-            for st in fs.listStatus(lroot)
-            if st.getPath().getName().startswith("gen=")
-        )
-        for g in gens[:-2]:
-            fs.delete(lroot.suffix(f"/gen={g}"), True)
-    fs.delete(marker_dir, True)
-    return -new_gen
+    fs, lroot = _fs_and_path(spark, f"{store_root}/labels")
+    for g in sorted(partition_ids(spark, f"{store_root}/labels", "gen"))[:-2]:
+        fs.delete(lroot.suffix(f"/gen={g}"), True)
+    return gen

@@ -10,32 +10,18 @@ band-signature store for cross-batch candidates, self-joins them for
 intra-batch candidates, verifies with exact Jaccard over the per-doc
 shingle-set store, and appends the new signatures to the store. Per
 batch the SHUFFLED/computed volume is O(new docs + candidates) — and so
-is the store-side READ volume, because both stores are laid out
-hash-BUCKETED, bucket-MAJOR (the same hashing sources/bucketed.py gives
-batch tables): `bands/bkt=pmod(xxhash64(bandsig), B)/batch_id=N` and
-`sets/bkt=pmod(xxhash64(id), B)/batch_id=N`. A micro-batch derives the
-touched-bucket set from its OWN rows (≤B small integers collected to
-the driver) and reads only matching `bkt=` directories. Pruning is
-lossless: a cross-batch candidate requires bandsig equality, and equal
-bandsigs hash to the same bucket; verification reads sets for exact
-candidate ids, and equal ids hash to the same bucket. So the per-batch
-store scan is O(store-size × touched-buckets / B) instead of O(store),
-which is what keeps a year of 15-minute batches readable at 10^12 docs
-(size B so one batch's distinct bandsigs touch a small fraction of it;
-the default here is test-scale, deployment wants 2^10-2^14).
-
-Bucket-major matters for METADATA cost, not just data cost (the round-4
-layout was batch-major, `batch_id=N/bkt=B`, and its per-batch listing
-walked every batch directory — O(stream age) FileSystem RPCs per
-micro-batch, quadratic over the stream's life): here a micro-batch
-issues exactly 2×|touched| RPCs (exists + listStatus per touched
-bucket), constant in the number of settled batches — pinned by
-tests/test_streaming_dedup.py::test_listing_rpcs_constant_in_batches.
-The per-bucket CHILD count still grows one `batch_id=` dir per batch;
-`compact_store` folds settled batches into a single consolidated
-generation (`batch_id=-g`) so steady-state stores hold ~2 children per
-bucket. Reference analog: the periodic Planet re-sync folding API
-deltas back into the base (bin/process/processPlanetNotes.sh --sync).
+is the store-side READ volume, because both stores are bucket-major
+sub-stores of streaming/store.py (`bands/` keyed by bandsig, `sets/`
+keyed by doc id) read pruned to the buckets the batch's own rows touch.
+Pruning is lossless here: a cross-batch candidate requires bandsig
+equality, and equal bandsigs hash to the same bucket; verification
+reads sets for exact candidate ids, and equal ids hash to the same
+bucket. So the per-batch store scan is O(store-size × touched-buckets /
+B) instead of O(store), which is what keeps a year of 15-minute batches
+readable at 10^12 docs (size B so one batch's distinct bandsigs touch a
+small fraction of it; the default here is test-scale, deployment wants
+2^10-2^14). The layout, its check, replay exclusion and the two-phase
+generation compaction (`compact_store`) are streaming/store.py's.
 
 Reference analog: the incremental API ingest path (the reference
 processes new notes against the existing base, bin/process/
@@ -52,9 +38,9 @@ full-corpus candidate set with no duplicates beyond the distinct.
 
 Exactly-once: every writer is keyed by micro-batch id (`batch_id=N`
 partitions — pairs as whole overwritten directories, bands/sets as
-dynamically-overwritten (bkt, batch_id) leaves), the idempotent
-foreachBatch pattern — a replayed batch rewrites the same rows instead
-of appending duplicates. Readers glob the store root.
+store.py's (bkt, batch_id) leaves), the idempotent foreachBatch
+pattern — a replayed batch rewrites the same rows instead of appending
+duplicates.
 
 Contract: doc ids are unique across the stream (append-only corpus).
 A replayed FILE is handled by batch-id idempotency; a re-INGESTED doc
@@ -66,7 +52,6 @@ its stale signatures remain in the store.
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,169 +62,18 @@ from ..operators.textops import (
     lsh_candidate_pairs,
     minhash_band_signatures_sets,
 )
+from .store import (
+    _bkt,
+    _pruned_store,
+    _touched_buckets,
+    check_layout,
+    compact,
+    read_all,
+    write_leaves,
+)
 
 _EMPTY_PAIRS = "id_a long, id_b long"
 _LOG = logging.getLogger(__name__)
-
-
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _bkt(col: str, n_buckets: int):
-    """Store bucket id for a key column: non-negative hash mod B.
-
-    xxhash64 is Spark-deterministic across sessions/versions-of-this-repo,
-    so a store written by one job is prunable by every later job."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(int(n_buckets))).cast("int")
-
-
-def _touched_buckets(df: DataFrame, col: str, n_buckets: int) -> list[int]:
-    """Distinct store buckets referenced by df[col] — ≤ n_buckets small
-    ints, the one driver collect that buys the pruned read."""
-    return [
-        r[0] for r in df.select(_bkt(col, n_buckets).alias("b")).distinct().collect()
-    ]
-
-
-def _check_layout(spark: SparkSession, store_dir: str, n_store_buckets: int) -> None:
-    """Enforce the store's layout contract LOUDLY: the first batch
-    records the bucket count and the layout version as empty marker
-    directories (`_layout/n_store_buckets=B`, `_layout/layout=bkt_major`
-    — no file-content I/O, works on any Hadoop filesystem); every later
-    batch validates against them. Without the B check, a mismatched
-    reader computes touched buckets mod a B that never matches the
-    directories on disk, every probe misses, and the store silently
-    reads as empty; without the layout check, a store written by the
-    earlier batch-major version would be read the same silent-empty way.
-    A crashed compaction (leftover `_compact/` marker) also fails here
-    rather than reading a store that may hold folded rows twice."""
-    fs, root = _fs_and_path(spark, store_dir)
-    if fs.exists(root.suffix("/_compact")):
-        raise ValueError(
-            f"store {store_dir} has an unfinished compaction (_compact "
-            "marker present): run compact_store() to finish or roll it "
-            "back before processing batches"
-        )
-    lay = root.suffix("/_layout")
-    if fs.exists(lay):
-        names = {st.getPath().getName() for st in fs.listStatus(lay)}
-        recorded = sorted(n for n in names if n.startswith("n_store_buckets="))
-        want = f"n_store_buckets={int(n_store_buckets)}"
-        if recorded != [want]:
-            raise ValueError(
-                f"store {store_dir} was written with {recorded}, this batch "
-                f"asked for {want}: n_store_buckets must stay constant for "
-                "the life of a store (re-bucket by rewriting the store)"
-            )
-        if "layout=bkt_major" not in names:
-            raise ValueError(
-                f"store {store_dir} uses the batch-major layout of an "
-                "earlier version (batch_id=N/bkt=B); rewrite it under the "
-                "bucket-major layout (bkt=B/batch_id=N) before resuming"
-            )
-    else:
-        fs.mkdirs(lay.suffix(f"/n_store_buckets={int(n_store_buckets)}"))
-        fs.mkdirs(lay.suffix("/layout=bkt_major"))
-
-
-def _list_children(fs, hpath):
-    """One FileSystem listStatus — factored out so tests can count RPCs."""
-    return list(fs.listStatus(hpath))
-
-
-def _pruned_store(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    touched: list[int],
-    exclude_batch_id: int | None = None,
-) -> DataFrame:
-    """Read ONLY the `bkt=` directories in `touched` from a
-    bucket-major (bkt=B/batch_id=N) store; empty DF if nothing matches.
-
-    The excluded batch (foreachBatch replay idempotency — the batch must
-    see exactly the state its first run saw) is skipped at the PATH
-    level, so a replay reads zero bytes of its own prior output.
-    Metadata cost: exists + ONE listStatus per TOUCHED bucket —
-    2×|touched| FileSystem RPCs per micro-batch, independent of how many
-    batches the store has settled (the round-4 batch-major layout walked
-    every batch dir instead, O(stream age) per batch). A store holding
-    data in any other layout fails LOUDLY rather than silently reading
-    as empty and dropping all cross-batch state."""
-    fs, hpath = _fs_and_path(spark, path)
-    if not touched or not fs.exists(hpath):
-        return spark.createDataFrame([], schema)
-    paths = []
-    for b in touched:
-        bdir = hpath.suffix(f"/bkt={int(b)}")
-        if not fs.exists(bdir):
-            continue
-        for st in _list_children(fs, bdir):
-            name = st.getPath().getName()
-            if not name.startswith("batch_id="):
-                if name.startswith(("_", ".")):
-                    continue
-                # data directly under bkt= (no batch_id= partition) =
-                # a foreign/legacy writer: refuse, don't misread
-                raise ValueError(
-                    f"{bdir} holds '{name}' without the batch_id= layout "
-                    "this reader replay-excludes by; rewrite the store "
-                    "with process_dedup_batch before resuming"
-                )
-            if (
-                exclude_batch_id is not None
-                and name == f"batch_id={int(exclude_batch_id)}"
-            ):
-                continue
-            paths.append(st.getPath().toString())
-    if not paths:
-        # nothing matched: distinguish "store genuinely holds no touched
-        # bucket" from "store exists in a layout we can't see" (e.g. the
-        # earlier batch-major batch_id=N/bkt=B form) — one extra listing
-        # only on this cold path
-        root_names = {c.getPath().getName() for c in _list_children(fs, hpath)}
-        foreign = {
-            n for n in root_names if not n.startswith(("bkt=", "_", "."))
-        }
-        if foreign:
-            raise ValueError(
-                f"{path} holds {sorted(foreign)[:3]} without the bkt= "
-                "bucket-major layout this reader prunes by; rewrite the "
-                "store with process_dedup_batch before resuming"
-            )
-        return spark.createDataFrame([], schema)
-    return (
-        spark.read.option("basePath", path)
-        .parquet(*paths)
-        .drop("batch_id", "bkt")
-    )
-
-
-def _store(
-    spark: SparkSession, path: str, schema: str, exclude_batch_id: int | None = None
-) -> DataFrame:
-    """Read a batch-id-partitioned parquet store; empty DF if absent.
-
-    exclude_batch_id: on a foreachBatch REPLAY the store already holds
-    the replayed batch's own rows — excluding them makes reprocessing
-    idempotent (the batch must see exactly the state its first run saw).
-
-    Existence is checked through the Hadoop FileSystem API so the store
-    may live on any Spark-reachable filesystem (HDFS/S3/local), not just
-    the driver's local disk."""
-    fs, hpath = _fs_and_path(spark, path)
-    if fs.exists(hpath) and any(
-        st.getPath().getName().startswith("batch_id=")
-        for st in fs.listStatus(hpath)
-    ):
-        df = spark.read.option("basePath", path).parquet(path)
-        if exclude_batch_id is not None:
-            df = df.where(F.col("batch_id") != int(exclude_batch_id))
-        return df.drop("batch_id")
-    return spark.createDataFrame([], schema)
 
 
 def process_dedup_batch(
@@ -275,14 +109,13 @@ def process_dedup_batch(
     Layout under store_dir: bands/ and sets/ hold the accumulated
     signature and shingle-set stores, pairs/ the verified near-dup pairs
     — all partitioned by batch_id for idempotent replay; the two joined
-    stores are BUCKET-MAJOR (`bkt=hash(key)%B / batch_id=N`) so each
+    stores are BUCKET-MAJOR sub-stores (streaming/store.py) so each
     batch reads only the buckets its own rows can match with a constant
-    number of listing RPCs (module doc). n_store_buckets must stay
-    constant for the life of a store."""
-    bands_dir = os.path.join(store_dir, "bands")
-    sets_dir = os.path.join(store_dir, "sets")
-    pairs_dir = os.path.join(store_dir, "pairs")
-    _check_layout(spark, store_dir, n_store_buckets)
+    number of listing RPCs. n_store_buckets must stay constant for the
+    life of a store."""
+    bands_dir = f"{store_dir}/bands"
+    sets_dir = f"{store_dir}/sets"
+    check_layout(spark, store_dir, n_store_buckets)
 
     new_sets = doc_shingle_sets(batch, id_col=id_col, text_col=text_col).persist()
     new_bands = minhash_band_signatures_sets(
@@ -410,26 +243,16 @@ def process_dedup_batch(
     # batch-id-keyed writes: a foreachBatch replay overwrites, not
     # appends. Pairs stay batch-major (never prune-read; mode=overwrite
     # replaces the whole batch_id=N directory); the two prune-read
-    # stores write bucket-major leaves (bkt=B/batch_id=N) via DYNAMIC
-    # partition overwrite — only the (bkt, batch_id) leaves present in
-    # this batch's rows are replaced, so a replay rewrites exactly its
-    # own leaves (same input ⇒ same buckets) and settled batches are
-    # untouched.
+    # stores write their own (bkt, batch_id) leaves (same input ⇒ same
+    # buckets), so settled batches are untouched.
     verified.write.mode("overwrite").parquet(
-        os.path.join(pairs_dir, f"batch_id={int(batch_id)}")
+        f"{store_dir}/pairs/batch_id={int(batch_id)}"
     )
     for df, key, root in (
         (new_bands, "bandsig", bands_dir),
         (new_sets, id_col, sets_dir),
     ):
-        (
-            df.withColumn("bkt", _bkt(key, n_store_buckets))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bkt", "batch_id")
-            .parquet(root)
-        )
+        write_leaves(df.withColumn("bkt", _bkt(key, n_store_buckets)), root, batch_id)
     for df in to_release:
         df.unpersist(blocking=False)
 
@@ -454,9 +277,7 @@ def streaming_near_dups(
         stream.writeStream.foreachBatch(
             lambda b, bid: process_dedup_batch(spark, b, bid, store_dir, **kwargs)
         )
-        .option(
-            "checkpointLocation", os.path.join(store_dir, "_stream_checkpoint")
-        )
+        .option("checkpointLocation", f"{store_dir}/_stream_checkpoint")
         .trigger(availableNow=True)
         .start()
     )
@@ -464,131 +285,17 @@ def streaming_near_dups(
 
 def near_dup_pairs(spark: SparkSession, store_dir: str) -> DataFrame:
     """The accumulated verified pair table (settled after the stream)."""
-    return _store(spark, os.path.join(store_dir, "pairs"), _EMPTY_PAIRS)
-
-
-def _delete_batch_dirs(fs, root, ids: set[int]) -> None:
-    """Delete `bkt=*/batch_id=i` leaves for every i in ids across both
-    prune-read stores (maintenance path; module-level so the crash-
-    recovery test can interpose)."""
-    for sub in ("bands", "sets"):
-        sroot = root.suffix(f"/{sub}")
-        if not fs.exists(sroot):
-            continue
-        for bk in fs.listStatus(sroot):
-            if not bk.getPath().getName().startswith("bkt="):
-                continue
-            for i in ids:
-                fs.delete(bk.getPath().suffix(f"/batch_id={int(i)}"), True)
-
-
-def _store_batch_ids(fs, root) -> set[int]:
-    """All batch_id values present in a bucket-major store (full walk —
-    maintenance-time only, never on the per-batch path)."""
-    ids: set[int] = set()
-    if not fs.exists(root):
-        return ids
-    for bk in fs.listStatus(root):
-        if not bk.getPath().getName().startswith("bkt="):
-            continue
-        for st in fs.listStatus(bk.getPath()):
-            name = st.getPath().getName()
-            if name.startswith("batch_id="):
-                ids.add(int(name.split("=", 1)[1]))
-    return ids
+    return read_all(spark, f"{store_dir}/pairs", _EMPTY_PAIRS)
 
 
 def compact_store(
     spark: SparkSession, store_dir: str, keep_batches: int = 1
 ) -> int:
     """Fold settled batches of the bands/ and sets/ stores into one
-    consolidated GENERATION per store (batch_id = -g, g increasing), so
-    a bucket's child count stays ~(1 + keep_batches) instead of growing
-    one `batch_id=` dir per micro-batch forever (a year of 15-minute
-    batches is ~35k children per listing otherwise). Returns the new
-    generation number, or 0 if there was nothing to fold.
-
-    Contract: run ONLY while the stream is stopped, with keep_batches
-    ≥ 1 — foreachBatch can replay the most recent batch after a restart,
-    and replay idempotency needs that batch's rows path-excludable, so
-    the newest keep_batches stream batches are never folded (prior
-    generations, batch_id < 0, always are). Pairs stay batch-major and
-    are not compacted (they are only ever read whole).
-
-    Crash safety (two-phase, empty marker dirs only): `_compact/gen=-g`
-    + `_compact/keep=K` are created before any generation data is
-    written; `_compact/committed` after BOTH stores' generation writes
-    succeed; everything is removed only after every folded directory is
-    deleted. `_check_layout` refuses to process batches while any marker
-    exists (the store may transiently hold folded rows twice), so the
-    fold set is recomputable at recovery. Re-running compact_store
-    recovers: no `committed` → roll BACK (delete the partial generation
-    — source dirs are untouched until commit) and refold; `committed` →
-    roll FORWARD (finish the deletes — the generation already holds
-    every folded row). Reference analog: the Planet re-sync folding API
-    deltas into the base (bin/process/processPlanetNotes.sh --sync).
-    """
-    if keep_batches < 1:
-        raise ValueError("keep_batches must be ≥ 1 (replay exclusion contract)")
-    fs, root = _fs_and_path(spark, store_dir)
-    marker_dir = root.suffix("/_compact")
-
-    def _fold_set(exclude_gen: int | None, keep: int) -> set[int]:
-        all_ids = _store_batch_ids(fs, root.suffix("/bands")) | _store_batch_ids(
-            fs, root.suffix("/sets")
-        )
-        stream_ids = sorted(i for i in all_ids if i >= 0)
-        gens = {i for i in all_ids if i < 0} - {exclude_gen}
-        return gens | set(stream_ids[: max(0, len(stream_ids) - keep)])
-
-    # recover a crashed compaction first
-    if fs.exists(marker_dir):
-        names = {st.getPath().getName() for st in fs.listStatus(marker_dir)}
-        # markers are created strictly BEFORE any generation write (gen=,
-        # then keep=, then data, then committed) — a marker dir missing
-        # gen= or keep= therefore predates all writes and is safe to
-        # treat as a no-op roll-back rather than crash on
-        stale_gen = next(
-            (int(n.split("=", 1)[1]) for n in names if n.startswith("gen=")), None
-        )
-        stale_keep = next(
-            (int(n.split("=", 1)[1]) for n in names if n.startswith("keep=")), None
-        )
-        if "committed" in names and stale_gen is not None and stale_keep is not None:
-            # roll forward: the generation is complete, finish the deletes
-            _delete_batch_dirs(fs, root, _fold_set(stale_gen, stale_keep))
-        elif stale_gen is not None:
-            # roll back: source dirs are intact, drop the partial gen
-            _delete_batch_dirs(fs, root, {stale_gen})
-        fs.delete(marker_dir, True)
-
-    fold = _fold_set(None, keep_batches)
-    gen_only = {i for i in fold if i < 0}
-    if not fold or (fold == gen_only and len(gen_only) <= 1):
-        return 0  # nothing worth folding (at most one existing generation)
-    new_gen = min(gen_only, default=0) - 1
-
-    fs.mkdirs(marker_dir.suffix(f"/gen={new_gen}"))
-    fs.mkdirs(marker_dir.suffix(f"/keep={int(keep_batches)}"))
-    fold_pred = F.col("batch_id").isin([int(i) for i in fold])
-    for sub in ("bands", "sets"):
-        sroot = root.suffix(f"/{sub}")
-        if not fs.exists(sroot):
-            continue
-        df = (
-            spark.read.option("basePath", sroot.toString())
-            .parquet(sroot.toString())
-            .where(fold_pred)
-            .withColumn("batch_id", F.lit(int(new_gen)))
-        )
-        # bkt is already a partition column of the read — rewrite keeps it
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bkt", "batch_id")
-            .parquet(sroot.toString())
-        )
-    fs.mkdirs(marker_dir.suffix("/committed"))
-    _delete_batch_dirs(fs, root, fold)
-    fs.delete(marker_dir, True)
-    return -new_gen
+    consolidated generation each (streaming/store.compact: contract,
+    crash recovery), rows kept as they are. Pairs stay batch-major and
+    are not compacted (they are only ever read whole). Returns the new
+    generation number, or 0 if there was nothing to fold."""
+    return compact(
+        spark, store_dir, dict.fromkeys(("bands", "sets"), lambda df: df), keep_batches
+    )

@@ -207,3 +207,26 @@ def test_stateful_fold_state_crosses_batches(spark, tmp_path):
     assert by_note[1] == ["close", "close", "open"]
     # note 2: open -> hidden -> (commented keeps hidden)
     assert by_note[2] == ["open", "hidden", "hidden"]
+
+
+def test_snapshot_store_root_is_local(tmp_path, monkeypatch):
+    # a file:// root means its local path; any other scheme is refused
+    # at construction instead of becoming a local directory "hdfs:"
+    monkeypatch.chdir(tmp_path)
+    assert SnapshotStore(f"file://{tmp_path}/snaps").root == f"{tmp_path}/snaps"
+    assert (tmp_path / "snaps").is_dir()
+    with pytest.raises(ValueError, match="SnapshotStore.*'hdfs'"):
+        SnapshotStore("hdfs://namenode/snaps")
+    assert not (tmp_path / "hdfs:").exists()
+
+
+def test_metrics_log_root_is_local(tmp_path, monkeypatch):
+    from osm_notes_ingestion_spark.operators.metrics import MetricsLog
+
+    monkeypatch.chdir(tmp_path)
+    log = MetricsLog(f"file://{tmp_path}/metrics")
+    log.log_counters("run", "stage", {"n": 1})
+    assert (tmp_path / "metrics" / "runs.jsonl").is_file()
+    with pytest.raises(ValueError, match="MetricsLog.*'s3a'"):
+        MetricsLog("s3a://bucket/metrics")
+    assert not (tmp_path / "s3a:").exists()

@@ -190,3 +190,25 @@ def test_merge_hulls_incremental_equals_full(spark):
            for r in state.collect()}
     assert got == want
     assert 9 in got and got[9][1] == 3
+
+
+def test_merge_hulls_null_key_merges_once(spark):
+    """A null key is merged like any other key: repeated merges keep ONE
+    null-key hull, equal to the full recompute (a plain equi-join split
+    never matched it, so each merge added another null-key row)."""
+    from osm_notes_ingestion_spark.operators.hull import merge_hulls
+
+    schema = "country_id long, lat double, lon double"
+    b0 = spark.createDataFrame(
+        [(None, 0.0, 0.0), (None, 1.0, 0.0), (None, 0.0, 1.0), (1, 0.0, 0.0), (1, 1.0, 1.0)],
+        schema,
+    )
+    b1 = spark.createDataFrame([(None, 5.0, 5.0), (1, 3.0, 3.0)], schema)
+    state = merge_hulls(merge_hulls(convex_hull(b0), b1), b1)
+    got = [(r["key"], [tuple(v) for v in r["hull"]]) for r in state.collect()]
+    want = [
+        (r["key"], [tuple(v) for v in r["hull"]])
+        for r in convex_hull(b0.unionByName(b1)).collect()
+    ]
+    assert len([k for k, _ in got if k is None]) == 1
+    assert sorted(got, key=str) == sorted(want, key=str)

@@ -119,3 +119,23 @@ def test_skewed_data_keeps_balanced_files(spark, tmp_path):
     )
     # no file more than ~4x the median (range partitioner balances rows)
     assert sizes[-1] <= 4 * sizes[len(sizes) // 2], sizes
+
+
+def test_rowgroups_without_statistics_are_unprunable(tmp_path):
+    # a writer may skip min/max statistics: such a row group cannot be
+    # pruned, so its envelope is the whole plane instead of a crash
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = tmp_path / "nostats"
+    p.mkdir()
+    table = pa.table({"id": [1, 2], "lat": [45.0, 46.0], "lon": [5.0, 6.0]})
+    pq.write_table(table, str(p / "part-0.parquet"), write_statistics=False)
+    files, rgs = bbox_file_stats(str(p))
+    assert len(files) == 1 and len(rgs) == 1
+    assert (rgs[0]["lat_min"], rgs[0]["lat_max"]) == (-math.inf, math.inf)
+    assert (rgs[0]["lon_min"], rgs[0]["lon_max"]) == (-math.inf, math.inf)
+    # a bbox far from the data still has to read it
+    assert bbox_overlap_fraction(files, lat_min=-10, lat_max=-5, lon_min=0, lon_max=1) == 1.0

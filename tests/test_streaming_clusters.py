@@ -49,8 +49,9 @@ def _full(spark, rows):
     }
 
 
-def test_settled_equals_batch_after_each_prefix(spark, tmp_path):
-    root = str(tmp_path / "store")
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+def test_settled_equals_batch_after_each_prefix(spark, tmp_path, scheme):
+    root = scheme + str(tmp_path / "store")
     seen = []
     for i, batch in enumerate((B1, B2, B3)):
         process_cluster_batch(spark, _mk(spark, batch), i, root, EPS, MIN_PTS, n_buckets=8)
@@ -87,13 +88,13 @@ def test_reads_are_bucket_pruned(spark, tmp_path, monkeypatch):
     n_store_buckets = len([d for d in os.listdir(f"{root}/points") if d.startswith("bkt=")])
 
     read_counts = []
-    orig = sc._read_buckets
+    orig = sc._pruned_store
 
-    def spy(spark_, r, buckets, schema, before):
+    def spy(spark_, r, schema, buckets, before):
         read_counts.append((os.path.basename(r), len(buckets)))
-        return orig(spark_, r, buckets, schema, before)
+        return orig(spark_, r, schema, buckets, before)
 
-    monkeypatch.setattr(sc, "_read_buckets", spy)
+    monkeypatch.setattr(sc, "_pruned_store", spy)
     local = [(1000 + i, 0, i * 200_000) for i in range(5)]  # one tiny area
     process_cluster_batch(spark, _mk(spark, local), 1, root, EPS, MIN_PTS, n_buckets=16)
     assert read_counts, "pruned reader not exercised"
@@ -198,9 +199,19 @@ def test_compaction_crash_rollback(spark, tmp_path):
     # simulate the pre-commit crash: markers exist, no 'committed'
     os.makedirs(f"{root}/_compact/gen=-1")
     os.makedirs(f"{root}/_compact/keep=1")
-    with pytest.raises(RuntimeError, match="compaction markers"):
+    with pytest.raises(ValueError, match="unfinished compaction"):
         process_cluster_batch(spark, _mk(spark, B3), 2, root, EPS, MIN_PTS, n_buckets=8)
     # recovery + fresh fold: rollback happens inside the next compact
     gen = compact_cluster_store(spark, root, keep_batches=1)
     assert gen >= 1
     assert _settled(spark, root) == before
+
+
+def test_bucket_count_change_raises(spark, tmp_path):
+    """A batch with another n_buckets hashes its ring cells into buckets
+    that never match the directories on disk, so it would silently miss
+    the old points; the store's layout check refuses it instead."""
+    root = str(tmp_path / "store")
+    process_cluster_batch(spark, _mk(spark, B1), 0, root, EPS, MIN_PTS, n_buckets=8)
+    with pytest.raises(ValueError, match="n_store_buckets"):
+        process_cluster_batch(spark, _mk(spark, B2), 1, root, EPS, MIN_PTS, n_buckets=16)

@@ -68,8 +68,10 @@ def _write_slices(spark, docs, src, n_slices=3):
         lo = hi
 
 
-def test_streaming_settled_equals_batch(spark, dirs):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+def test_streaming_settled_equals_batch(spark, dirs, scheme):
     src, store = dirs
+    store = scheme + store
     docs = _docs(spark)
     _write_slices(spark, docs, src, n_slices=3)
     q = streaming_near_dups(spark, src, docs.schema, store)
@@ -226,7 +228,7 @@ def test_listing_rpcs_constant_in_batches(spark, dirs, monkeypatch):
     per TOUCHED BUCKET, not one per settled batch. Pin the listStatus
     call count for the same touched set after 2 and after 5 batches —
     equal, while the store's batch count grew."""
-    import osm_notes_ingestion_spark.streaming.dedup as sd
+    import osm_notes_ingestion_spark.streaming.store as st
 
     _, store = dirs
     docs = _docs(spark)
@@ -237,15 +239,15 @@ def test_listing_rpcs_constant_in_batches(spark, dirs, monkeypatch):
 
     def probe_listings():
         calls = {"n": 0}
-        real = sd._list_children
+        real = st._list_children
 
         def counting(fs, hpath):
             calls["n"] += 1
             return real(fs, hpath)
 
-        monkeypatch.setattr(sd, "_list_children", counting)
+        monkeypatch.setattr(st, "_list_children", counting)
         n_rows = _pruned_store(spark, bands_dir, schema, touched).count()
-        monkeypatch.setattr(sd, "_list_children", real)
+        monkeypatch.setattr(st, "_list_children", real)
         return calls["n"], n_rows
 
     for i in range(2):
@@ -320,7 +322,7 @@ def test_compaction_crash_recovery(spark, dirs, monkeypatch):
     compact_store recovers from both crash phases: pre-commit (roll back
     the partial generation, refold) and post-commit (roll forward the
     deletes, never refold) — either way the settled state is intact."""
-    import osm_notes_ingestion_spark.streaming.dedup as sd
+    import osm_notes_ingestion_spark.streaming.store as st
 
     _, store = dirs
     docs = _docs(spark)
@@ -344,18 +346,18 @@ def test_compaction_crash_recovery(spark, dirs, monkeypatch):
     # yet, keep=1 keeps batch 2) is fully written and `committed` exists,
     # but the folded dirs survive.
     process_dedup_batch(spark, docs.where("doc_id % 4 = 3"), 3, store)
-    real_delete = sd._delete_batch_dirs
+    real_delete = st._delete_batch_dirs
 
     def crash_delete(fs, root, ids):
         raise RuntimeError("simulated crash after commit")
 
-    monkeypatch.setattr(sd, "_delete_batch_dirs", crash_delete)
+    monkeypatch.setattr(st, "_delete_batch_dirs", crash_delete)
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_store(spark, store, keep_batches=1)
     assert os.path.isdir(os.path.join(store, "_compact", "committed"))
     with pytest.raises(ValueError, match="unfinished compaction"):
         process_dedup_batch(spark, docs.limit(1), 4, store)
-    monkeypatch.setattr(sd, "_delete_batch_dirs", real_delete)
+    monkeypatch.setattr(st, "_delete_batch_dirs", real_delete)
     # recovery rolls FORWARD (gen -2 already holds every folded row);
     # afterwards only gen -2 remains foldable → nothing new, returns 0
     assert compact_store(spark, store, keep_batches=1) == 0

@@ -138,3 +138,20 @@ def test_append_mode_emits_closed_sessions_once(spark, tmp_path):
     assert starts[1] - starts[0] == 7200
     assert by_start[starts[0]] == (2, 30)
     assert by_start[starts[1]] == (1, 0)
+
+
+def test_runner_stream_sessions_drops_no_late_events(spark, sf_dir, tmp_path):
+    # the runner stages time-ordered, mtime-ordered slices, so no event
+    # is older than the watermark when its micro-batch runs; the count
+    # is Spark's own numRowsDroppedByWatermark, summed over the query
+    import json
+
+    from osm_notes_ingestion_spark import runner
+
+    out = str(tmp_path / "out")
+    runner.main(["--job", "stream_sessions", "--sf-dir", sf_dir, "--output", out])
+    with open(f"{out}/metrics/runs.jsonl") as f:
+        recs = [json.loads(line) for line in f]
+    counters = next(r["counters"] for r in recs if r["stage"] == "stream_sessions")
+    assert counters["n_late_dropped"] == 0
+    assert counters["n_emitted"] + counters["n_in_flight"] == counters["n_batch_total"]
