@@ -183,7 +183,7 @@ def main() -> None:
     # init, broadcast unpack, codegen)
     warm = pages_df(spark, SF_DIR).limit(CPUS * 64).repartition(CPUS)
     materialize(fused_extract_assign(spark, warm, index))
-    # also warm the declarative path (cell-join broadcast + refine UDF)
+    # also warm the declarative path (the same kernel via mapInArrow)
     from osm_notes_ingestion_spark.operators.extract import extract_pages
     from osm_notes_ingestion_spark.operators.spatial_join import assign_countries
 
@@ -204,7 +204,7 @@ def main() -> None:
         trial_steal["flagship_assign"],
     ) = best_of(flagship, max(TRIALS, 3))
 
-    # assign_country: the declarative split-refine operator over a
+    # assign_country: the declarative assign operator over a
     # MATERIALIZED extracted table (the production shape — extraction is
     # its own job; assign reads the narrow lake table with pruning).
     # Materialization is untimed and cached like the flagship input.

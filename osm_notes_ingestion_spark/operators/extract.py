@@ -44,48 +44,50 @@ EXTRACT_SCHEMA = (
 )
 
 
+def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One Arrow batch of pages → its extracted rows (EXTRACT_SCHEMA)."""
+    html = pd.Series(pdf["html"], dtype="string")
+
+    coords = html.str.extract(_META_RE)
+    for pat in (_DIV_RE, _SPAN_RE):
+        missing = coords[0].isna()
+        if missing.any():
+            alt = html[missing].str.extract(pat)
+            coords.loc[missing, 0] = alt[0]
+            coords.loc[missing, 1] = alt[1]
+    lat = pd.to_numeric(coords[0], errors="coerce")
+    lon = pd.to_numeric(coords[1], errors="coerce")
+
+    found = lat.notna() & lon.notna()
+    valid = found & lat.between(-90.0, 90.0) & lon.between(-180.0, 180.0)
+    rejected = found & ~valid
+    lat = lat.where(valid)
+    lon = lon.where(valid)
+
+    text = html.str.extract(_TEXT_RE)[0]
+    for ent, ch in _ENTITIES:
+        text = text.str.replace(ent, ch, regex=False)
+
+    return pd.DataFrame(
+        {
+            "id": pdf["id"],
+            "url": pdf["url"],
+            "warc_ts": pdf["warc_ts"],
+            "lang": pdf["lang"],
+            "lat": lat.astype("float64"),
+            "lon": lon.astype("float64"),
+            "lat_e6": (lat * 1e6).round().astype("Int64"),
+            "lon_e6": (lon * 1e6).round().astype("Int64"),
+            "text": text.astype(object),
+            "has_coords": valid.fillna(False).astype(bool),
+            "rejected": rejected.fillna(False).astype(bool),
+        }
+    )
+
+
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        html = pd.Series(pdf["html"], dtype="string")
-
-        coords = html.str.extract(_META_RE)
-        for pat in (_DIV_RE, _SPAN_RE):
-            missing = coords[0].isna()
-            if missing.any():
-                alt = html[missing].str.extract(pat)
-                coords.loc[missing, 0] = alt[0]
-                coords.loc[missing, 1] = alt[1]
-        lat = pd.to_numeric(coords[0], errors="coerce")
-        lon = pd.to_numeric(coords[1], errors="coerce")
-
-        found = lat.notna() & lon.notna()
-        valid = found & lat.between(-90.0, 90.0) & lon.between(-180.0, 180.0)
-        rejected = found & ~valid
-        lat = lat.where(valid)
-        lon = lon.where(valid)
-
-        text = html.str.extract(_TEXT_RE)[0]
-        for ent, ch in _ENTITIES:
-            text = text.str.replace(ent, ch, regex=False)
-
-        out = pd.DataFrame(
-            {
-                "id": pdf["id"],
-                "url": pdf["url"],
-                "warc_ts": pdf["warc_ts"],
-                "lang": pdf["lang"],
-                "lat": lat.astype("float64"),
-                "lon": lon.astype("float64"),
-                "lat_e6": (lat * 1e6).round(),
-                "lon_e6": (lon * 1e6).round(),
-                "text": text.astype(object),
-                "has_coords": valid.fillna(False).astype(bool),
-                "rejected": rejected.fillna(False).astype(bool),
-            }
-        )
-        out["lat_e6"] = out["lat_e6"].astype("Int64")
-        out["lon_e6"] = out["lon_e6"].astype("Int64")
-        yield out
+        yield _extract_batch(pdf)
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:

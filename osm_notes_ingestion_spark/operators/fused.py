@@ -1,25 +1,17 @@
-"""Fused extract+assign kernel: ONE Arrow round trip for the hot path.
+"""Fused extract+assign: ONE Arrow round trip for the raw-page hot path.
 
-The declarative pipeline (extract.mapInPandas → JVM cell join → refine
-pandas_udf) crosses the JVM↔Python Arrow boundary twice, and a
-`F.when(needs, udf(...))` wrapper cannot short-circuit — Spark evaluates
-Python UDFs for every row in the batch, so the second crossing carries
-the full fact table even though only ~4% of rows need exact PIP.
+A composition, not a second implementation: one mapInPandas runs the
+extraction body (`extract._extract_batch`) and then the assignment
+kernel (`spatial_join._assign_block`) on the same batch, so pages cross
+the JVM↔Python boundary once instead of once per operator. The output
+is extraction's columns plus assign_countries' (cell, country_id,
+n_candidates, refined); tests/test_fused.py holds the two paths equal
+row for row.
 
-This kernel fuses the whole per-row path into a single mapInPandas:
-regex extraction → numpy geocell encode → candidate lookup against the
-broadcast cover (numpy searchsorted over the sorted cell array) →
-full-cell fast path → vectorized winding refinement for boundary rows.
-Semantics are identical to operators.spatial_join.assign_countries —
-equivalence is asserted in tests/test_fused.py and both paths feed the
-same oracle suite.
-
-At 100 TB the fused kernel is still embarrassingly parallel (map-only,
-polygon pack + cover broadcast once per executor); what it gives up is
-Catalyst visibility into the join — which Catalyst could not optimize
-further anyway (it's already a broadcast map join with no alternatives).
-Use the declarative path when composing with other relational operators;
-use this for the raw throughput pipeline (bench, runner).
+At 100 TB the pass is still embarrassingly parallel (map-only, cover and
+polygon pack broadcast once per executor). Use the declarative pair
+(extract_pages → assign_countries) when composing with other relational
+operators; use this for the raw throughput pipeline (bench, runner).
 """
 
 from __future__ import annotations
@@ -29,183 +21,36 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions import cells as C
-from ..functions.geometry import PolygonPack
-from ..operators.extract import _ENTITIES, _DIV_RE, _META_RE, _SPAN_RE, _TEXT_RE
+from .extract import EXTRACT_SCHEMA, _extract_batch
+from .spatial_join import _assign_block, _cover_broadcast
 from ..sources.polygons import PolygonIndex
 
-FUSED_SCHEMA = (
-    "id long, url string, warc_ts timestamp, lang string, "
-    "lat double, lon double, lat_e6 long, lon_e6 long, text string, "
-    "has_coords boolean, rejected boolean, cell long, country_id long, "
-    "n_candidates int, refined boolean"
-)
-
-
-class _CoverLookup:
-    """Sorted-array candidate lookup built once per worker from the pack.
-
-    cells_sorted: unique cover cells; for each, a slice into the
-    candidate arrays (priority-sorted). Lookup = searchsorted — O(log n)
-    per point, fully vectorized.
-    """
-
-    def __init__(self, index_payload: dict):
-        self.level = index_payload["level"]
-        order = np.lexsort(
-            (
-                index_payload["country_ids"],
-                index_payload["priorities"],
-                index_payload["cells"],
-            )
-        )
-        self.cells = index_payload["cells"][order]
-        self.cids = index_payload["country_ids"][order]
-        self.prios = index_payload["priorities"][order]
-        self.fulls = index_payload["fulls"][order]
-        uniq, starts = np.unique(self.cells, return_index=True)
-        self.uniq_cells = uniq
-        self.starts = starts
-        self.ends = np.append(starts[1:], len(self.cells))
-        self.pack: PolygonPack = index_payload["pack"]
-        self.idx_of = self.pack.index_of_id()
-
-
-def _assign_block(lk: _CoverLookup, lats: np.ndarray, lons: np.ndarray):
-    """Vectorized assignment for one batch. Returns (country, ncand, refined)."""
-    n = len(lats)
-    country = np.full(n, -1, dtype=np.int64)
-    ncand = np.zeros(n, dtype=np.int32)
-    refined = np.zeros(n, dtype=bool)
-    if n == 0:
-        return country, ncand, refined
-    pcell = C.encode(lats, lons, lk.level)
-    pos = np.searchsorted(lk.uniq_cells, pcell)
-    pos_ok = (pos < len(lk.uniq_cells)) & (lk.uniq_cells[np.minimum(pos, len(lk.uniq_cells) - 1)] == pcell)
-    hit = np.flatnonzero(pos_ok)
-    if len(hit) == 0:
-        return country, ncand, refined
-    s = lk.starts[pos[hit]]
-    e = lk.ends[pos[hit]]
-    ncand[hit] = (e - s).astype(np.int32)
-    # fast path: walk candidate slices; rows whose first candidate that is
-    # full precedes any partial get resolved JVM-free. Python loop only
-    # over rows with BOUNDARY candidates (small); pure-full rows vectorize.
-    width = e - s
-    for w in np.unique(width):
-        rows = hit[width == w]
-        base = lk.starts[pos[rows]]
-        # matrix of candidate indices (rows × w)
-        mat = base[:, None] + np.arange(w)[None, :]
-        fl = lk.fulls[mat]
-        first_full = np.where(fl.any(axis=1), fl.argmax(axis=1), w)
-        # contenders: partial candidates strictly before the first full
-        has_contender = first_full > 0
-        pure = rows[~has_contender & (first_full < w)]
-        if len(pure):
-            country[pure] = lk.cids[lk.starts[pos[pure]] + first_full[~has_contender & (first_full < w)]]
-        cont_rows = rows[has_contender]
-        if len(cont_rows) == 0:
-            continue
-        refined[cont_rows] = True
-        ff = first_full[has_contender]
-        cb = lk.starts[pos[cont_rows]]
-        # fallback = first full candidate (or -1)
-        fb = np.where(ff < w, lk.cids[np.minimum(cb + ff, len(lk.cids) - 1)], -1)
-        fb[ff >= w] = -1
-        res = fb.copy()
-        decided = np.zeros(len(cont_rows), dtype=bool)
-        for j in range(int(ff.max()) if len(ff) else 0):
-            active = ~decided & (j < ff)
-            if not active.any():
-                continue
-            cand_idx = cb[active] + j
-            sub = np.flatnonzero(active)
-            for cid in np.unique(lk.cids[cand_idx]):
-                m = lk.cids[cand_idx] == cid
-                rows_m = sub[m]
-                contained = lk.pack.contains(
-                    lk.idx_of[int(cid)], lons[cont_rows[rows_m]], lats[cont_rows[rows_m]]
-                )
-                win = rows_m[contained]
-                res[win] = cid
-                decided[win] = True
-        country[cont_rows] = res
-    return country, ncand, refined
+FUSED_SCHEMA = EXTRACT_SCHEMA + ", cell long, country_id long, n_candidates int, refined boolean"
 
 
 def fused_extract_assign(
     spark: SparkSession, pages: DataFrame, index: PolygonIndex
 ) -> DataFrame:
-    payload = {
-        "level": index.level,
-        "cells": index.cells,
-        "country_ids": index.country_ids,
-        "priorities": index.priorities,
-        "fulls": index.fulls,
-        "pack": index.pack,
-    }
-    bc = spark.sparkContext.broadcast(payload)
+    bc = _cover_broadcast(spark, index)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lk = _CoverLookup(bc.value)
+        lk = bc.value
         for pdf in it:
-            html = pd.Series(pdf["html"], dtype="string")
-            coords = html.str.extract(_META_RE)
-            for pat in (_DIV_RE, _SPAN_RE):
-                missing = coords[0].isna()
-                if missing.any():
-                    alt = html[missing].str.extract(pat)
-                    coords.loc[missing, 0] = alt[0]
-                    coords.loc[missing, 1] = alt[1]
-            lat = pd.to_numeric(coords[0], errors="coerce")
-            lon = pd.to_numeric(coords[1], errors="coerce")
-            found = lat.notna() & lon.notna()
-            valid = found & lat.between(-90.0, 90.0) & lon.between(-180.0, 180.0)
-            rejected = (found & ~valid).fillna(False).astype(bool)
-            lat = lat.where(valid)
-            lon = lon.where(valid)
-
-            text = html.str.extract(_TEXT_RE)[0]
-            for ent, ch in _ENTITIES:
-                text = text.str.replace(ent, ch, regex=False)
-
-            vmask = valid.fillna(False).to_numpy(dtype=bool)
-            lats = lat.to_numpy(dtype=np.float64)[vmask]
-            lons = lon.to_numpy(dtype=np.float64)[vmask]
-            country_v, ncand_v, refined_v = _assign_block(lk, lats, lons)
-            country = np.full(len(pdf), np.nan)
-            ncand = np.zeros(len(pdf), dtype=np.int32)
-            refined = np.zeros(len(pdf), dtype=bool)
-            country[vmask] = country_v
-            ncand[vmask] = ncand_v
-            refined[vmask] = refined_v
-            cellcol = np.full(len(pdf), np.nan)
-            if vmask.any():
-                cellcol[vmask] = C.encode(lats, lons, lk.level).astype(np.float64)
-
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "lang": pdf["lang"],
-                    "lat": lat.astype("float64"),
-                    "lon": lon.astype("float64"),
-                    "lat_e6": (lat * 1e6).round().astype("Int64"),
-                    "lon_e6": (lon * 1e6).round().astype("Int64"),
-                    "text": text.astype(object),
-                    "has_coords": vmask,
-                    "rejected": rejected,
-                    "cell": pd.Series(cellcol).astype("Int64"),
-                    "country_id": pd.Series(country).astype("Int64"),
-                    "n_candidates": ncand,
-                    "refined": refined,
-                }
+            out = _extract_batch(pdf)
+            located = out["has_coords"].to_numpy()
+            cell, country, ncand, refined = _assign_block(
+                lk,
+                out["lat"].to_numpy(dtype=np.float64),
+                out["lon"].to_numpy(dtype=np.float64),
+                located,
             )
-
-    from pyspark.sql import functions as F
+            out["cell"] = pd.arrays.IntegerArray(cell, ~located)
+            out["country_id"] = pd.arrays.IntegerArray(country, ~located)
+            out["n_candidates"] = ncand
+            out["refined"] = refined
+            yield out
 
     # lenient decode: ANSI-mode F.decode throws on malformed UTF-8 (see
     # operators/extract.py) — cast + make_valid_utf8 replaces instead

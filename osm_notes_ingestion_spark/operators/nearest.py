@@ -30,9 +30,9 @@ Per batch the kernel prunes by a per-polygon bbox distance lower bound
 (processed in ascending country_id so ties resolve for free), so the
 exact segment sweep only runs for polygons whose bbox could still win —
 for admin-0 ocean points that is the handful of coastal neighbours, not
-the whole dimension. Callers feed only the unmatched subset (the same
-physical filter->kernel->union split assign_countries uses for its
-refine branch), so Arrow volume is the ocean fraction, not the corpus.
+the whole dimension. Callers feed only the unmatched subset (a physical
+filter->kernel->union split: a `when(...)` around a Python kernel cannot
+short-circuit), so Arrow volume is the ocean fraction, not the corpus.
 """
 
 from __future__ import annotations

@@ -8,39 +8,118 @@ needs 3 hours for 4.8M points on a 16-thread Postgres host
 
 Spark-first re-expression — designed so the FACT SIDE NEVER SHUFFLES:
 
-1. encode each point's geocell JVM-side (functions/cells.cell_col);
-2. broadcast-hash-join against the prepped cell→candidates table
-   (sources/polygons.candidates_df) — map-side only;
-3. resolve per row IN THE JVM where possible: the candidate list is
-   priority-sorted, so the first `full` candidate wins unless a
-   higher-priority `partial` (boundary-cell) candidate precedes it;
-4. only rows with contending partial candidates enter the Arrow-batched
-   exact even-odd PIP refinement UDF (a small fraction at level ≥ 8 —
-   the analog of the reference's 95% fast-path hit rate,
-   functionsProcess_21...sql:41-58);
-5. winner = first contained candidate in (priority, country_id) order;
+1. the prepped cover (cell → priority-sorted candidates) and the
+   `PolygonPack` are broadcast once per call as one `_CoverLookup`;
+2. points stream through ONE Arrow-batched `mapInArrow`: numpy encodes
+   each point's geocell and finds its candidate slice by searchsorted
+   over the sorted cover cells;
+3. the candidate list is priority-sorted, so the first `full` candidate
+   wins unless a higher-priority `partial` (boundary-cell) candidate
+   precedes it; only rows with such contenders run the vectorized
+   even-odd PIP (a small fraction at level ≥ 8 — the analog of the
+   reference's 95% fast-path hit rate, functionsProcess_21...sql:41-58);
+4. winner = first contained candidate in (priority, country_id) order;
    −1 when no candidate contains the point.
 
+The same kernel (`_assign_block`) runs inside the fused extract+assign
+pass (operators/fused.py), so both entry points share one assignment.
+
 At 100 TB this is a single map-only stage over the pages scan: no
-shuffle, no skew sensitivity (hot cells cost nothing extra — broadcast
-joins don't repartition by key). An explicit salted shuffle variant
-(`assign_countries_partitioned`) exists for the hypothetical case where
-the polygon dimension outgrows broadcast (e.g. admin-2 worldwide).
+shuffle, no skew sensitivity (hot cells cost nothing extra — the cover
+rides along as a broadcast, never repartitioned by key). An explicit
+salted shuffle variant (`assign_countries_partitioned`) exists for the
+hypothetical case where the polygon dimension outgrows broadcast (e.g.
+admin-2 worldwide).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.cells import cell_col
+from ..functions.cells import cell_col, encode
 from ..functions.geometry import PolygonPack
-from ..sources.polygons import PolygonIndex, candidates_df, cover_df
+from ..sources.polygons import PolygonIndex, cover_df
 
 NO_MATCH = -1  # reference: get_country returns -1 (…sql:32,223)
+
+
+class _CoverLookup:
+    """The assignment kernel's broadcast payload: the cover sorted by
+    (cell, priority, country_id) plus the PolygonPack for exact PIP.
+
+    For each unique cover cell, [starts, ends) slices its candidates.
+    Lookup = searchsorted — O(log n) per point, fully vectorized.
+    """
+
+    def __init__(self, index: PolygonIndex):
+        self.level = index.level
+        order = np.lexsort((index.country_ids, index.priorities, index.cells))
+        cells = index.cells[order]
+        self.cids = index.country_ids[order]
+        self.fulls = index.fulls[order]
+        self.uniq_cells, self.starts = np.unique(cells, return_index=True)
+        self.ends = np.append(self.starts[1:], len(cells))
+        self.pack: PolygonPack = index.pack
+        self.idx_of = self.pack.index_of_id()
+
+
+def _cover_broadcast(spark: SparkSession, index: PolygonIndex):
+    """Build and broadcast the kernel payload — the one place both
+    `assign_countries` and `fused_extract_assign` get it from."""
+    return spark.sparkContext.broadcast(_CoverLookup(index))
+
+
+def _assign_block(lk: _CoverLookup, lats: np.ndarray, lons: np.ndarray, located: np.ndarray):
+    """Vectorized assignment for one batch → (cell, country_id,
+    n_candidates, refined). Rows outside `located` (no coordinates) get
+    cell 0, NO_MATCH, 0 candidates and refined=False; callers mask them.
+    """
+    n = len(lats)
+    cell = np.zeros(n, dtype=np.int64)
+    country = np.full(n, NO_MATCH, dtype=np.int64)
+    ncand = np.zeros(n, dtype=np.int32)
+    refined = np.zeros(n, dtype=bool)
+    loc = np.flatnonzero(located)
+    cell[loc] = encode(lats[loc], lons[loc], lk.level)
+    if len(lk.uniq_cells) == 0:
+        return cell, country, ncand, refined
+    pos = np.minimum(np.searchsorted(lk.uniq_cells, cell[loc]), len(lk.uniq_cells) - 1)
+    in_cover = lk.uniq_cells[pos] == cell[loc]
+    hit, pos = loc[in_cover], pos[in_cover]
+    base = lk.starts[pos]
+    width = lk.ends[pos] - base
+    ncand[hit] = width
+    # one pass per candidate-list width: a (rows × width) matrix of
+    # candidate slots, so pure full-cell rows resolve without a PIP test
+    for w in np.unique(width):
+        sel = width == w
+        rows, b = hit[sel], base[sel]
+        fl = lk.fulls[b[:, None] + np.arange(w)]
+        has_full = fl.any(axis=1)
+        first_full = np.where(has_full, fl.argmax(axis=1), w)
+        # fallback: the first full candidate (else NO_MATCH) ...
+        country[rows[has_full]] = lk.cids[b[has_full] + first_full[has_full]]
+        # ... unless a partial candidate before it contains the point
+        refined[rows[first_full > 0]] = True
+        decided = np.zeros(len(rows), dtype=bool)
+        for j in range(int(first_full.max())):
+            active = np.flatnonzero(~decided & (j < first_full))
+            cand = lk.cids[b[active] + j]
+            for cid in np.unique(cand):
+                sub = active[cand == cid]
+                r = rows[sub]
+                inside = lk.pack.contains(lk.idx_of[int(cid)], lons[r], lats[r])
+                country[r[inside]] = cid
+                decided[sub[inside]] = True
+    return cell, country, ncand, refined
 
 
 def _first_contained_winner(
@@ -54,7 +133,7 @@ def _first_contained_winner(
     (priority, country_id)-sorted list that contains it; else fallback.
 
     contains_fn(cid, lons, lats) -> bool array — the only thing that
-    differs between the broadcast-pack refine UDF (whole-polygon PIP)
+    differs between the salted path's refine UDF (whole-polygon PIP)
     and the distributed cell-fragment refine (clipped-fragment PIP).
     Vectorized over all points listing each candidate — never per-row.
     """
@@ -81,43 +160,12 @@ def _first_contained_winner(
     return best_id
 
 
-def _make_refine_udf(spark: SparkSession, pack: PolygonPack):
-    """Vectorized exact-PIP refinement.
-
-    Inputs per row: lon, lat, candidate ids (priority-sorted, only the
-    contenders that could beat the best full-cell match), and the
-    fallback winner. Returns the final country id. Inside: one winding
-    test per (distinct polygon in batch), vectorized over all points
-    that list it — never per-row Python.
-    """
-    bc = spark.sparkContext.broadcast(pack)
-
-    @F.pandas_udf(T.LongType())
-    def refine(lon: pd.Series, lat: pd.Series, cand_ids: pd.Series, fallback: pd.Series) -> pd.Series:
-        pk: PolygonPack = bc.value
-        idx_of = pk.index_of_id()
-
-        def contains_fn(cid: int, lons: np.ndarray, lats: np.ndarray) -> np.ndarray:
-            return pk.contains(idx_of[cid], lons, lats)
-
-        best = _first_contained_winner(
-            lon.to_numpy(dtype=np.float64),
-            lat.to_numpy(dtype=np.float64),
-            cand_ids,
-            fallback.to_numpy(dtype=np.int64),
-            contains_fn,
-        )
-        return pd.Series(best)
-
-    return refine
-
-
 def _resolve_candidates(joined: DataFrame) -> DataFrame:
     """JVM-side resolution over the priority-sorted candidate array:
     best full candidate = first with full=true; contenders = partial
     candidates strictly before it in sort order. Adds _fallback,
-    _contender_ids, n_candidates, refined. Shared by the broadcast-pack
-    and distributed (cell-fragment) assignment paths."""
+    _contender_ids, n_candidates, refined, for the distributed
+    (cell-fragment) assignment path."""
     full_only = F.filter(F.col("cands"), lambda c: c["full"])
     best_full = F.when(F.size(full_only) > 0, F.element_at(full_only, 1))
     fallback = F.coalesce(best_full["country_id"], F.lit(NO_MATCH))
@@ -205,47 +253,54 @@ def assign_countries(
     lon_col: str = "lon",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """points → (id, [keep_cols...], cell, country_id, n_candidates, refined).
+    """points → (id, [keep_cols...], lat, lon, cell, country_id, n_candidates, refined).
 
-    Rows with null lat/lon get country_id = NULL (page had no coordinates);
-    rows matching no polygon get NO_MATCH (−1).
+    Rows with null lat get cell and country_id = NULL (page had no
+    coordinates); rows matching no polygon get NO_MATCH (−1). One
+    mapInArrow runs `_assign_block` on the Arrow buffers; the id and
+    keep columns pass through untouched.
     """
-    cands = candidates_df(spark, index)
     pts = points.select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in keep_cols],
         F.col(lat_col).alias("lat"),
         F.col(lon_col).alias("lon"),
-    ).withColumn(
-        "cell",
-        F.when(F.col("lat").isNotNull(), cell_col(F.col("lat"), F.col("lon"), index.level)),
     )
-
-    joined = pts.join(F.broadcast(cands), "cell", "left")
-    resolved = _resolve_candidates(joined)
-
-    # Split-refine: only rows with contending partial candidates (~4% at
-    # cover level 9) enter the Arrow-batched exact-PIP branch; everyone
-    # else resolves fully JVM-side. A `when(needs, refine(...))` cannot
-    # short-circuit — Spark evaluates a pandas UDF over the whole batch —
-    # so the split is physical: filter → refine → union. Both branches are
-    # map-only (filter over the same broadcast join; union is narrow), so
-    # the fact side still never shuffles. The upstream lineage runs once
-    # per branch; at scale the assign input is a materialized narrow
-    # table, so the extra pass is a cheap pruned scan while the Arrow
-    # volume drops by the refine fraction (~25x).
-    refine = _make_refine_udf(spark, index.pack)
-    fast = resolved.where(~F.col("refined")).withColumn(
-        "country_id",
-        F.when(F.col("lat").isNull(), F.lit(None).cast("long")).otherwise(F.col("_fallback")),
+    schema = T.StructType(
+        pts.schema.fields
+        + [
+            T.StructField("cell", T.LongType()),
+            T.StructField("country_id", T.LongType()),
+            T.StructField("n_candidates", T.IntegerType(), False),
+            T.StructField("refined", T.BooleanType()),
+        ]
     )
-    slow = resolved.where(F.col("refined")).withColumn(
-        "country_id",
-        refine(F.col("lon"), F.col("lat"), F.col("_contender_ids"), F.col("_fallback")),
-    )
-    assigned = fast.unionByName(slow)
+    bc = _cover_broadcast(spark, index)
 
-    return assigned.select("id", *keep_cols, "lat", "lon", "cell", "country_id", "n_candidates", "refined")
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        lk: _CoverLookup = bc.value
+        for b in batches:
+            lat, lon = b.column("lat"), b.column("lon")
+            no_lat = lat.is_null().to_numpy(zero_copy_only=False)
+            located = pc.and_(lat.is_valid(), lon.is_valid()).to_numpy(zero_copy_only=False)
+            cell, country, ncand, refined = _assign_block(
+                lk,
+                pc.cast(lat, pa.float64()).to_numpy(zero_copy_only=False),
+                pc.cast(lon, pa.float64()).to_numpy(zero_copy_only=False),
+                located,
+            )
+            yield pa.RecordBatch.from_arrays(
+                b.columns
+                + [
+                    pa.array(cell, mask=~located),
+                    pa.array(country, mask=no_lat),
+                    pa.array(ncand),
+                    pa.array(refined),
+                ],
+                names=schema.fieldNames(),
+            )
+
+    return pts.mapInArrow(assign, schema)
 
 
 def assignment_metrics(assigned: DataFrame) -> DataFrame:
@@ -291,8 +346,10 @@ def assign_countries_distributed(
 
     Parity with the broadcast path: clipped-fragment PIP equals
     whole-polygon PIP for lattice points strictly inside the grown cell
-    box (functions/geometry.clip_rings_box; sources/polygons.CLIP_EPS),
-    and both paths share _resolve_candidates + _first_contained_winner.
+    box (functions/geometry.clip_rings_box; sources/polygons.CLIP_EPS).
+    Winners resolve through _resolve_candidates + _first_contained_winner,
+    independently of the broadcast kernel; tests/test_distributed_prep.py
+    holds the two equal.
     """
     import pandas as pd
 

@@ -91,8 +91,8 @@ def q_assign_country(spark, sf_dir):
     (NO_MATCH) points additionally get the nearest polygon under the
     pinned floored-µdeg² metric — the reference's maritime-boundary
     assignment for ocean notes (functionsProcess_21:223 → maritime
-    rows). Physical filter→kernel→union split keeps the Arrow volume to
-    the ocean fraction; matched rows resolve JVM-side."""
+    rows). Physical filter→kernel→union split keeps the nearest kernel's
+    Arrow volume to the ocean fraction; matched rows skip it."""
     from ..operators.nearest import nearest_polygon
 
     assigned = assign_countries(

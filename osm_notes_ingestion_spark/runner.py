@@ -187,7 +187,13 @@ def main(argv: list[str] | None = None) -> None:
         else:
             assigned = assign_countries(spark, ext, index)
             assigned.write.mode("overwrite").parquet(f"{args.output}/assignments")
-            mlog.log_stage(run_id, "assignment_metrics", assignment_metrics(assigned))
+            # from the written table: the lazy plan would extract and
+            # assign again; lineage keeps the producer's partition ids
+            mlog.log_stage(
+                run_id,
+                "assignment_metrics",
+                assignment_metrics(spark.read.parquet(f"{args.output}/assignments")),
+            )
             mlog.log_stage(run_id, "lineage", partition_lineage(assigned))
         mlog.log_stage(run_id, "extraction_metrics", extraction_metrics(ext))
     elif args.job == "fused":

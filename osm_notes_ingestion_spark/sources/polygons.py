@@ -7,15 +7,15 @@ sql/process/processPlanetNotes_25_createCountryTables.sql:117-118).
 Here the polygon dimension is prepped ONCE on the driver (admin-0 scale:
 a few hundred polygons) into:
 
-1. a `PolygonPack` (flat numpy arrays) broadcast to executors for exact
-   PIP refinement, and
-2. a cell→candidates lookup table: every geocell at the cover level maps
-   to its priority-sorted candidate list [(priority, country_id, full)].
-   `full=true` cells prove containment with no exact test (the quadtree
-   interior), so at join time only boundary-cell points pay for Python.
+1. a `PolygonPack` (flat numpy arrays) for exact PIP refinement, and
+2. a quadtree cell cover: one (cell, priority, country_id, full) row per
+   polygon per geocell at the cover level. `full=true` cells prove
+   containment with no exact test (the quadtree interior), so only
+   boundary-cell points pay for point-in-polygon.
 
-The candidates table is tiny (≈10⁴–10⁶ rows × few entries) → broadcast
-hash join; the 100 TB fact side never shuffles for assignment.
+Both are tiny (≈10⁴–10⁶ cover rows) and ride to executors as one
+broadcast (operators/spatial_join._CoverLookup); the 100 TB fact side
+never shuffles for assignment.
 """
 
 from __future__ import annotations
@@ -103,82 +103,6 @@ def cover_df(spark: SparkSession, index: PolygonIndex) -> DataFrame:
         }
     )
     return spark.createDataFrame(pdf, schema=_CAND_SCHEMA)
-
-
-# The candidate table is a build-time artifact (the reference preps its
-# countries table + priority grid once, not per query) — memoize the
-# driver-side row materialization per (session, index) so repeated
-# queries in one session don't re-serialize 46k nested rows each time.
-_CANDIDATES_CACHE: dict[tuple, DataFrame] = {}
-
-
-def candidates_df(spark: SparkSession, index: PolygonIndex) -> DataFrame:
-    """cell → priority-sorted candidate array (what gets broadcast).
-
-    Aggregated DRIVER-SIDE with numpy (the cover is driver-resident
-    already): the Spark plan then contains zero exchanges — a
-    LocalTableScan straight into BroadcastExchange. A groupBy here would
-    put a (tiny but pointless) shuffle into every assignment job.
-    """
-    import hashlib
-
-    import numpy as np
-
-    # content-keyed: id()-based keys can silently alias a *different*
-    # polygon set after garbage collection reuses an address
-    content = hashlib.md5(
-        index.cells.tobytes()
-        + index.country_ids.tobytes()
-        + index.priorities.tobytes()
-        + index.fulls.tobytes()
-    ).hexdigest()
-    key = (spark.sparkContext.applicationId, content, index.level)
-    cached = _CANDIDATES_CACHE.get(key)
-    if cached is not None:
-        return cached
-
-    order = np.lexsort((index.country_ids, index.priorities, index.cells))
-    cells = index.cells[order]
-    prios = index.priorities[order]
-    cids = index.country_ids[order]
-    fulls = index.fulls[order]
-    if len(cells) == 0:
-        starts = ends = np.zeros(0, dtype=np.int64)
-    else:
-        bounds = np.flatnonzero(np.diff(cells)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(cells)]))
-    rows = [
-        (
-            int(cells[s]),
-            [
-                (int(prios[i]), int(cids[i]), bool(fulls[i]))
-                for i in range(s, e)
-            ],
-        )
-        for s, e in zip(starts, ends)
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("cell", T.LongType(), False),
-            T.StructField(
-                "cands",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("priority", T.LongType(), False),
-                            T.StructField("country_id", T.LongType(), False),
-                            T.StructField("full", T.BooleanType(), False),
-                        ]
-                    )
-                ),
-                False,
-            ),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema=schema)
-    _CANDIDATES_CACHE[key] = df
-    return df
 
 
 # ------------------------------------------------------- distributed prep
@@ -352,7 +276,7 @@ def prep_polygons_distributed(
 
 def candidates_from_cover(cover: DataFrame) -> DataFrame:
     """cell → priority-sorted candidate array, as a Spark aggregation
-    (the distributed twin of `candidates_df`'s driver-side numpy group).
+    (the distributed twin of `_CoverLookup`'s driver-side numpy sort).
     One shuffle at PREP time; the result joins (broadcast when it fits)
     against the fact side, which never shuffles."""
     return cover.groupBy("cell").agg(

@@ -1,8 +1,9 @@
 """Physical-plan audits: the claims in ARCHITECTURE.md, asserted.
 
 A correct result from a wrong plan is a 100TB incident waiting; these
-tests fail if the assignment join stops being broadcast, if a shuffle
-sneaks into the map-only pipeline, or if pushdown/pruning regress.
+tests fail if assignment stops being one map-only Arrow pass, if a
+shuffle sneaks into the map-only pipeline, or if pushdown/pruning
+regress.
 """
 
 from __future__ import annotations
@@ -18,14 +19,25 @@ from osm_notes_ingestion_spark.sources.synth import pages_df, world_polygons
 
 @pytest.fixture(scope="module")
 def assigned_plan(spark, sf_dir):
+    # earlier modules leave extract_pages(pages_df(...)) cached; planned
+    # onto that cache, the printed plan repeats the cached subplan (its
+    # initial and final AQE plans) and the node counts below double
+    spark.catalog.clearCache()
     index = prep_polygons(world_polygons(), level=7)
     df = assign_countries(spark, extract_pages(pages_df(spark, sf_dir)), index)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_assignment_join_is_broadcast(assigned_plan):
-    assert "BroadcastHashJoin" in assigned_plan
-    assert "SortMergeJoin" not in assigned_plan
+def test_assignment_is_one_arrow_pass(assigned_plan):
+    """One assignment kernel: extraction is the plan's only MapInPandas,
+    assignment its only MapInArrow (the broadcast cover lookup + PIP in
+    one batch pass), with no refine UDF, no branch union — and the pages
+    are scanned once, not once per branch."""
+    assert assigned_plan.count("MapInPandas") == 1, assigned_plan
+    assert assigned_plan.count("MapInArrow") == 1, assigned_plan
+    assert "Union" not in assigned_plan
+    assert "ArrowEvalPython" not in assigned_plan
+    assert assigned_plan.count("FileScan parquet") == 1, assigned_plan
 
 
 def test_assignment_has_no_shuffle(assigned_plan):
@@ -45,25 +57,6 @@ def test_watermark_filter_pushdown(spark, sf_dir):
     assert "PushedFilters: [IsNotNull(ts), GreaterThan(ts" in plan
     # column pruning: html-sized columns absent from ReadSchema
     assert "props" not in plan.split("ReadSchema")[1][:200]
-
-
-def test_refine_branch_is_filtered(assigned_plan):
-    """Split-refine claim: the Arrow (pandas-UDF) stage sits on a FILTERED
-    branch — only contender rows pay for Python, not the whole table. The
-    plan must be a Union whose Arrow subtree is fed by a size(_contender)
-    filter; the fast branch has no Python at all."""
-    assert "Union" in assigned_plan
-    assert assigned_plan.count("ArrowEvalPython") == 1
-    # tree print: the Arrow node's subtree appears after it. Catalyst
-    # pushes the contender-size predicate onto the broadcast BUILD side
-    # (only contender cells survive) and the join becomes Inner — assert
-    # both: an Inner broadcast join and a size(...)>0 filter in the
-    # subtree, and no Python node in the fast branch (before the Arrow).
-    arrow_subtree = assigned_plan.split("ArrowEvalPython", 1)[1]
-    assert "BroadcastHashJoin" in arrow_subtree and "Inner" in arrow_subtree
-    assert "Filter (size(" in arrow_subtree
-    fast_branch = assigned_plan.split("ArrowEvalPython", 1)[0]
-    assert "EvalPython" not in fast_branch.replace("ArrowEvalPython", "")
 
 
 def test_refine_fraction_is_small(spark, sf_dir):
@@ -301,8 +294,8 @@ def test_nearest_leg_arrow_is_on_filtered_branch(spark, sf_dir):
     """The assign_country gate's nearest-polygon leg must keep Arrow
     volume to the NO_MATCH fraction: exactly one MapInPandas node (the
     nearest kernel), sitting under the country_id = -1 filtered branch,
-    with the matched branch resolving JVM-side — and no cartesian /
-    nested-loop joins anywhere (mirrors the refine-branch audit)."""
+    with the matched branch skipping it — and no cartesian /
+    nested-loop joins anywhere."""
     from osm_notes_ingestion_spark.plans.queries_spatial import q_assign_country
 
     plan = (
