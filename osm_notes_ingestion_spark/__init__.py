@@ -4,8 +4,8 @@ A from-scratch reimplementation of the query/data-processing semantics of
 OSMLatam/OSM-Notes-Ingestion (reference snapshot at /root/reference/,
 2025-10-31), re-expressed Spark-first:
 
-- coordinate extraction from web-page HTML via Arrow-batched mapInPandas
-  (reference: awk/extract_notes.awk state machine);
+- coordinate extraction from web-page HTML via an Arrow-native mapInArrow
+  kernel (reference: awk/extract_notes.awk state machine);
 - geocell (quadtree) indexing + broadcast cell-cover join + exact
   even-odd point-in-polygon refinement (reference: get_country() plpgsql
   loop over zone-priority candidates,

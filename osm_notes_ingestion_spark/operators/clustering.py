@@ -204,6 +204,20 @@ class ClusterState:
     min_pts: int
 
 
+def _materialized(state: ClusterState) -> ClusterState:
+    """The state with each frame local-checkpointed (eager): each fold
+    reads the prior state several times, so a lazy state nests every
+    earlier fold's plan and the plans, not the data, dominate the cost
+    (components.connected_components keeps the same discipline)."""
+    return ClusterState(
+        state.points.localCheckpoint(eager=True),
+        state.core_labels.localCheckpoint(eager=True),
+        state.border_edges.localCheckpoint(eager=True),
+        state.eps_e6,
+        state.min_pts,
+    )
+
+
 def _labels_from(state: ClusterState) -> DataFrame:
     """(id, cluster, role) from maintenance state: cores wear their CC
     label, borders take the SMALLEST core-neighbour component (the same
@@ -259,7 +273,7 @@ def grid_cluster_init(
         .join(core_ids.withColumnRenamed("id", "id_b"), "id_b")  # build side core
         .select("id", F.col("id_b").alias("core_id"))
     )
-    state = ClusterState(state_pts, labels, border_edges, int(eps_e6), int(min_pts))
+    state = _materialized(ClusterState(state_pts, labels, border_edges, int(eps_e6), int(min_pts)))
     return state, _labels_from(state)
 
 
@@ -375,5 +389,5 @@ def grid_cluster_increment(
         .distinct()
     )
 
-    state2 = ClusterState(points2, labels2, border_edges2, state.eps_e6, min_pts)
+    state2 = _materialized(ClusterState(points2, labels2, border_edges2, state.eps_e6, min_pts))
     return state2, _labels_from(state2)

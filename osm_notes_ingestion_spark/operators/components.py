@@ -20,9 +20,9 @@ in O(log² n) rounds. This is the published scale-out algorithm for
 bounded by the (shrinking) edge list, skew bounded because large-star
 moves every node's heavy adjacency onto its min in one round.
 
-Driver loop touches ONE scalar per round (an order-insensitive
-edge-set checksum: count + bit_xor of xxhash64(src,dst)) — the same
-one-collect-per-iteration discipline as operators/knn.py's knn_df.
+Driver loop touches ONE boolean per round (is the edge set already a
+star forest?) — the same one-collect-per-iteration discipline as
+operators/knn.py's knn_df.
 """
 
 from __future__ import annotations
@@ -64,6 +64,20 @@ def _star(edges: DataFrame, large: bool) -> DataFrame:
     return moved.union(self_edge)
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Whether a canonical edge list is a star forest around each
+    component's minimum: every node is a center (all neighbours larger)
+    or a leaf (one neighbour, smaller). A leaf's neighbour is then a
+    center, since a node with a smaller neighbour and a leaf is neither.
+    One aggregation, exact."""
+    per_node = edges.groupBy("src").agg(F.min("dst").alias("mn"), F.count("*").alias("deg"))
+    center = F.col("mn") > F.col("src")
+    leaf = (F.col("deg") == 1) & (F.col("mn") < F.col("src"))
+    # a count, not isEmpty(): the limit behind isEmpty() scans the
+    # shuffled partitions in growing waves, one job each, to say "empty"
+    return per_node.where(~(center | leaf)).count() == 0
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -80,13 +94,12 @@ def connected_components(
     guards the O(log² n) convergence bound — 30 rounds covers any graph
     this side of 2^30 nodes of pathological chain structure.
 
-    The convergence test is two-stage: an order-insensitive checksum
-    (count + bit_xor of xxhash64) of the canonical edge set as the cheap
-    per-round filter, then — only on a checksum match — an exact
-    `exceptAll(...).isEmpty()` confirmation before exiting. A checksum
-    collision between distinct edge sets (~2^-64 per round) therefore
-    costs one wasted confirmation job and the loop continues; it can
-    never exit on a non-star-forest and mislabel components.
+    The convergence test is exact and runs before every round: the loop
+    stops once the canonical edge set is a star forest around each
+    component's minimum (`_is_star_forest`). Star forests are the
+    algorithm's fixpoints, so this exits where an unchanged-edge-set
+    test would, one round earlier, and an input that is already a star
+    forest (an empty edge set included) costs no round at all.
 
     Lineage discipline: every round LOCAL-CHECKPOINTS its edge set
     (eager). Plain cache() leaves the full logical plan in place, and
@@ -101,24 +114,12 @@ def connected_components(
     e = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))).localCheckpoint(
         eager=True
     )
-    prev_sig = None
-    for _ in range(max_iter):
-        e_prev = e
-        e2 = _canon(_star(_canon(_star(e, large=True)), large=False)).localCheckpoint(eager=True)
-        row = e2.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("x"),
-        ).collect()[0]
-        sig = (row["n"], row["x"])
-        e = e2
-        # sig match ⇒ counts are exactly equal (count is not hashed), so
-        # one-direction exceptAll emptiness confirms multiset equality —
-        # a checksum collision continues the loop instead of mislabeling
-        if sig == prev_sig and e2.exceptAll(e_prev).isEmpty():
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds == max_iter:
+            raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+        e = _canon(_star(_canon(_star(e, large=True)), large=False)).localCheckpoint(eager=True)
+        rounds += 1
 
     # at the fixpoint every component is a star around its min: labels =
     # (leaf → min) from the edges, (min → itself) for the centers

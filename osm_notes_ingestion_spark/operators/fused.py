@@ -1,12 +1,12 @@
 """Fused extract+assign: ONE Arrow round trip for the raw-page hot path.
 
-A composition, not a second implementation: one mapInPandas runs the
-extraction body (`extract._extract_batch`) and then the assignment
-kernel (`spatial_join._assign_block`) on the same batch, so pages cross
-the JVM↔Python boundary once instead of once per operator. The output
-is extraction's columns plus assign_countries' (cell, country_id,
-n_candidates, refined); tests/test_fused.py holds the two paths equal
-row for row.
+A composition, not a second implementation: one mapInArrow runs the
+extraction kernel (`extract._extract_batch`) and then the assignment
+kernel (`spatial_join._assign_block`) on the extracted Arrow arrays, so
+pages cross the JVM↔Python boundary once instead of once per operator.
+The output is extraction's columns plus assign_countries' (cell,
+country_id, n_candidates, refined); tests/test_fused.py holds the two
+paths equal row for row.
 
 At 100 TB the pass is still embarrassingly parallel (map-only, cover and
 polygon pack broadcast once per executor). Use the declarative pair
@@ -18,12 +18,11 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .extract import EXTRACT_SCHEMA, _extract_batch
+from .extract import EXTRACT_SCHEMA, _extract_batch, _kernel_input
 from .spatial_join import _assign_block, _cover_broadcast
 from ..sources.polygons import PolygonIndex
 
@@ -35,24 +34,23 @@ def fused_extract_assign(
 ) -> DataFrame:
     bc = _cover_broadcast(spark, index)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract_assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         lk = bc.value
-        for pdf in it:
-            out = _extract_batch(pdf)
-            located = out["has_coords"].to_numpy()
+        for b in batches:
+            out = _extract_batch(b)
+            located = out.column("has_coords").to_numpy(zero_copy_only=False)
             cell, country, ncand, refined = _assign_block(
                 lk,
-                out["lat"].to_numpy(dtype=np.float64),
-                out["lon"].to_numpy(dtype=np.float64),
+                pc.fill_null(out.column("lat"), float("nan")).to_numpy(),
+                pc.fill_null(out.column("lon"), float("nan")).to_numpy(),
                 located,
             )
-            out["cell"] = pd.arrays.IntegerArray(cell, ~located)
-            out["country_id"] = pd.arrays.IntegerArray(country, ~located)
-            out["n_candidates"] = ncand
-            out["refined"] = refined
-            yield out
+            yield pa.RecordBatch.from_pydict({
+                **dict(zip(out.schema.names, out.columns)),
+                "cell": pa.array(cell, mask=~located),
+                "country_id": pa.array(country, mask=~located),
+                "n_candidates": ncand,
+                "refined": refined,
+            })
 
-    # lenient decode: ANSI-mode F.decode throws on malformed UTF-8 (see
-    # operators/extract.py) — cast + make_valid_utf8 replaces instead
-    decoded = pages.withColumn("html", F.expr("make_valid_utf8(CAST(html AS STRING))"))
-    return decoded.mapInPandas(batches, schema=FUSED_SCHEMA)
+    return _kernel_input(pages).mapInArrow(extract_assign, schema=FUSED_SCHEMA)

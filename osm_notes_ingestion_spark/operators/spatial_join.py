@@ -351,7 +351,7 @@ def assign_countries_distributed(
     independently of the broadcast kernel; tests/test_distributed_prep.py
     holds the two equal.
     """
-    import pandas as pd
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     from ..sources.polygons import candidates_from_cover
 
@@ -385,34 +385,23 @@ def assign_countries_distributed(
     )
     frags = cover.where(~F.col("full")).select("cell", "country_id", "frag")
 
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), True),
-            T.StructField("lat", T.DoubleType(), True),
-            T.StructField("lon", T.DoubleType(), True),
-            T.StructField("cell", T.LongType(), True),
-            T.StructField("country_id", T.LongType(), True),
-            T.StructField("n_candidates", T.IntegerType(), True),
-            T.StructField("refined", T.BooleanType(), True),
-        ]
-    )
+    out_schema = pa.schema([
+        ("id", pa.int64()), ("lat", pa.float64()), ("lon", pa.float64()), ("cell", pa.int64()),
+        ("country_id", pa.int64()), ("n_candidates", pa.int32()), ("refined", pa.bool_()),
+    ])
 
-    def refine_cell(key, pts_pdf: pd.DataFrame, frag_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pts_pdf) == 0:
-            return pd.DataFrame(
-                {c: pd.Series(dtype=t) for c, t in
-                 [("id", "int64"), ("lat", "float64"), ("lon", "float64"), ("cell", "int64"),
-                  ("country_id", "int64"), ("n_candidates", "int32"), ("refined", "bool")]}
-            )
-        frag_rings: dict[int, list[np.ndarray]] = {}
-        for cid, frag in zip(frag_pdf["country_id"], frag_pdf["frag"]):
-            rings = (
-                [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in frag]
-                if frag is not None
-                else []
-            )
-            frag_rings[int(cid)] = rings
+    # Arrow, not pandas: the cogroup also calls this once per fragment
+    # cell without refined points, and a pandas conversion per such call
+    # made those empty calls the bulk of the stage
+    def refine_cell(pts: pa.Table, frag: pa.Table) -> pa.Table:
+        if pts.num_rows == 0:
+            return out_schema.empty_table()
         from ..functions.geometry import points_in_rings
+
+        frag_rings = {
+            cid: [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in rings or []]
+            for cid, rings in zip(frag["country_id"].to_pylist(), frag["frag"].to_pylist())
+        }
 
         def contains_fn(cid: int, lons: np.ndarray, lats: np.ndarray) -> np.ndarray:
             rings = frag_rings.get(cid, [])
@@ -421,28 +410,22 @@ def assign_countries_distributed(
             return points_in_rings(lons, lats, rings)
 
         best = _first_contained_winner(
-            pts_pdf["lon"].to_numpy(dtype=np.float64),
-            pts_pdf["lat"].to_numpy(dtype=np.float64),
-            pts_pdf["_contender_ids"],
-            pts_pdf["_fallback"].to_numpy(dtype=np.int64),
+            pts["lon"].to_numpy(),
+            pts["lat"].to_numpy(),
+            pts["_contender_ids"].to_pylist(),
+            pts["_fallback"].to_numpy(),
             contains_fn,
         )
-        return pd.DataFrame(
-            {
-                "id": pts_pdf["id"].to_numpy(),
-                "lat": pts_pdf["lat"].to_numpy(),
-                "lon": pts_pdf["lon"].to_numpy(),
-                "cell": pts_pdf["cell"].to_numpy(),
-                "country_id": best,
-                "n_candidates": pts_pdf["n_candidates"].to_numpy(),
-                "refined": np.ones(len(pts_pdf), dtype=bool),
-            }
-        )
+        return pa.table(
+            [pts["id"], pts["lat"], pts["lon"], pts["cell"], best,
+             pts["n_candidates"], np.ones(pts.num_rows, dtype=bool)],
+            names=out_schema.names,
+        ).cast(out_schema)
 
     slow = (
         need.groupBy("cell")
         .cogroup(frags.groupBy("cell"))
-        .applyInPandas(refine_cell, schema=out_schema)
+        .applyInArrow(refine_cell, schema=from_arrow_schema(out_schema))
     )
     return fast.select(
         "id", "lat", "lon", "cell", "country_id", F.col("n_candidates").cast("int"), "refined"

@@ -187,8 +187,9 @@ def process_cluster_batch(
 
     prior_labels = _labels(spark, store_root, before_batch=batch_id)
 
-    pairs_nn = _eps_pairs(new, new, level, eps2)
-    pairs_no = _eps_pairs(new, old, level, eps2)
+    # each pair set feeds the counts, the delta edges and the border adds
+    pairs_nn = _eps_pairs(new, new, level, eps2).cache()
+    pairs_no = _eps_pairs(new, old, level, eps2).cache()
 
     # --- neighbour-count increments (append-only nbinc rows)
     inc_old = pairs_no.groupBy("id_b").agg(F.count("*").alias("inc")).withColumnRenamed("id_b", "id")
@@ -221,7 +222,7 @@ def process_cluster_batch(
     slice_core = old_core_now.unionByName(new_core)
 
     promoted_idx = old.join(promoted, "id")
-    pairs_po = _eps_pairs(promoted_idx, old, level, eps2)
+    pairs_po = _eps_pairs(promoted_idx, old, level, eps2).cache()
 
     core_b = slice_core.withColumnRenamed("id", "id_b")
     delta_edges = (
@@ -272,8 +273,8 @@ def process_cluster_batch(
     write_leaves(inc_rows, f"{store_root}/nbinc", batch_id)
     write_leaves(border_rows, f"{store_root}/border", batch_id)
     labels2.write.mode("overwrite").parquet(f"{store_root}/labels/gen={batch_id}")
-    new.unpersist()
-    old.unpersist()
+    for df in (new, old, pairs_nn, pairs_no, pairs_po):
+        df.unpersist()
 
 
 def streaming_clusters(

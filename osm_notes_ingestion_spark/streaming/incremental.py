@@ -94,8 +94,9 @@ class IncrementalRunner:
             merged = keep.unionByName(assigned)
         else:
             merged = assigned
-        n_assigned = merged.count()
         self.store.write_snapshot(merged)
+        # from the snapshot's footers: counting `merged` reruns the assignment
+        n_assigned = self.store.latest(self.spark).count()
 
         # quality gates, both required to advance:
         # 1. extraction health: % of rows rejected by coordinate validation

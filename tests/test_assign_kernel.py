@@ -1,5 +1,5 @@
 """The assignment kernel's output contract, on both entry points:
-assign_countries (mapInArrow) and fused_extract_assign (mapInPandas)."""
+assign_countries and fused_extract_assign (one mapInArrow each)."""
 
 from __future__ import annotations
 

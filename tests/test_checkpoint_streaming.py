@@ -95,6 +95,34 @@ def test_incremental_runner_watermark(spark, index, sf_dir, tmp_path):
     assert _as_map(store.latest(spark)) == full
 
 
+def test_run_batch_assigns_once(spark, index, sf_dir, tmp_path):
+    """One run_batch call runs the assignment kernel in exactly one SQL
+    execution (the snapshot write), read from Spark's SQL status store:
+    counting the unpersisted merge as well would run it twice. The kernel
+    is told apart from extraction (also a MapInArrow) by its function."""
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return [e.executionId() for e in conv.asJava(status.executionsList())]
+
+    def runs_assign(eid):
+        return any(
+            n.name() == "MapInArrow" and n.desc().startswith("MapInArrow assign(")
+            for n in conv.asJava(status.planGraph(eid).allNodes())
+        )
+
+    runner = IncrementalRunner(spark, index, SnapshotStore(str(tmp_path / "once")))
+    pages = pages_df(spark, sf_dir)
+    for _ in range(2):  # first batch, then one merging into a snapshot
+        before = max(executions(), default=-1)
+        r = runner.run_batch(pages)
+        assert r.n_assigned == pages.count()
+        assigning = [eid for eid in executions() if eid > before and runs_assign(eid)]
+        assert len(assigning) == 1, assigning
+
+
 def test_missing_children_block_watermark_advance(spark, index, sf_dir, tmp_path):
     """The reference's integrity gate: a batch whose parents lack child
     rows (notes without comments, J5 anti-join) must NOT advance the

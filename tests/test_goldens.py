@@ -73,28 +73,50 @@ def test_golden_knn(spark, ext):
     )
 
 
-def test_text_regex_unrolled_equals_lazy():
-    """_TEXT_RE is the unrolled-loop form of '<p class="c">([\\s\\S]*?)</p>'
-    — pin equivalence on the adversarial shapes (unclosed tag, nested
-    opening tag, empty capture, multiline, markup inside)."""
-    import pandas as pd
+def test_text_kernel_equals_python_lazy_re():
+    """The kernel's RE2 text capture (`(?s)<p class="c">(.*?)</p>`, then
+    the entity decode) equals Python re's lazy '<p class="c">([\\s\\S]*?)</p>'
+    plus the same decode, on the adversarial shapes (unclosed tag,
+    nested opening tag, empty capture, multiline, markup inside)."""
+    import re
 
-    from osm_notes_ingestion_spark.operators.extract import _TEXT_RE
+    import pyarrow as pa
 
-    lazy = r'<p class="c">([\s\S]*?)</p>'
-    adv = pd.Series(
+    from osm_notes_ingestion_spark.operators.extract import _ENTITIES, _extract_batch
+
+    lazy = re.compile(r'<p class="c">([\s\S]*?)</p>')
+
+    def expected(html):
+        m = lazy.search(html) if html is not None else None
+        if m is None:
+            return None
+        text = m.group(1)
+        for ent, ch in _ENTITIES:
+            text = text.replace(ent, ch)
+        return text
+
+    adv = [
+        '<p class="c">x</p>',
+        '<p class="c">no close',
+        "no open</p>",
+        '<p class="c">a<p class="c">b</p>c</p>',
+        "",
+        None,
+        '<p class="c"></p>',
+        'pre<p class="c">multi\nline</p>post',
+        '<p class="c">a<b>bold</b> &lt;tag&gt;</p>',
+        '<p class="x">other</p><p class="c">ours</p>',
+    ]
+    n = len(adv)
+    batch = pa.RecordBatch.from_arrays(
         [
-            '<p class="c">x</p>',
-            '<p class="c">no close',
-            "no open</p>",
-            '<p class="c">a<p class="c">b</p>c</p>',
-            "",
-            None,
-            '<p class="c"></p>',
-            'pre<p class="c">multi\nline</p>post',
-            '<p class="c">a<b>bold</b> &lt;tag&gt;</p>',
-            '<p class="x">other</p><p class="c">ours</p>',
+            pa.array(range(n), pa.int64()),
+            pa.array([""] * n),
+            pa.array([None] * n, pa.timestamp("us", tz="UTC")),
+            pa.array([""] * n),
+            pa.array(adv, pa.string()),
         ],
-        dtype="string",
+        names=["id", "url", "warc_ts", "lang", "html"],
     )
-    assert adv.str.extract(_TEXT_RE)[0].equals(adv.str.extract(lazy)[0])
+    got = _extract_batch(batch).column("text").to_pylist()
+    assert got == [expected(h) for h in adv]

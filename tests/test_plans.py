@@ -29,15 +29,35 @@ def assigned_plan(spark, sf_dir):
 
 
 def test_assignment_is_one_arrow_pass(assigned_plan):
-    """One assignment kernel: extraction is the plan's only MapInPandas,
-    assignment its only MapInArrow (the broadcast cover lookup + PIP in
-    one batch pass), with no refine UDF, no branch union — and the pages
-    are scanned once, not once per branch."""
-    assert assigned_plan.count("MapInPandas") == 1, assigned_plan
-    assert assigned_plan.count("MapInArrow") == 1, assigned_plan
+    """Two Arrow kernels and nothing else in Python: extraction, then
+    assignment (the broadcast cover lookup + PIP in one batch pass), each
+    one MapInArrow, with no pandas conversion, no refine UDF, no branch
+    union — and the pages are scanned once, not once per branch."""
+    assert assigned_plan.count("MapInPandas") == 0, assigned_plan
+    assert assigned_plan.count("MapInArrow") == 2, assigned_plan
+    assert assigned_plan.index("MapInArrow assign(") < assigned_plan.index("MapInArrow extract(")
     assert "Union" not in assigned_plan
     assert "ArrowEvalPython" not in assigned_plan
     assert assigned_plan.count("FileScan parquet") == 1, assigned_plan
+
+
+def test_fused_is_one_arrow_pass(spark, sf_dir):
+    """The fused pass crosses into Python once: one MapInArrow (extract
+    then assign on the same batch), no pandas conversion, one page scan."""
+    from osm_notes_ingestion_spark.operators.fused import fused_extract_assign
+
+    spark.catalog.clearCache()
+    index = prep_polygons(world_polygons(), level=7)
+    plan = (
+        fused_extract_assign(spark, pages_df(spark, sf_dir), index)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan
+    assert "ArrowEvalPython" not in plan
+    assert plan.count("FileScan parquet") == 1, plan
 
 
 def test_assignment_has_no_shuffle(assigned_plan):
@@ -73,7 +93,7 @@ def test_refine_fraction_is_small(spark, sf_dir):
 def test_s2_hex_encoders_stay_in_codegen(spark, sf_dir):
     """The alternate cell encoders are pure JVM expressions: no Python
     eval node may appear in their plans (the only allowed Python stage is
-    the extraction mapInPandas upstream)."""
+    the extraction mapInArrow upstream)."""
     from osm_notes_ingestion_spark.functions.cells_alt import hex_cell_col, s2_cell_col
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
@@ -304,7 +324,7 @@ def test_nearest_leg_arrow_is_on_filtered_branch(spark, sf_dir):
         .executedPlan()
         .toString()
     )
-    # the nearest kernel appears EXACTLY once (extraction's mapInPandas
+    # the nearest kernel appears EXACTLY once (extraction's mapInArrow
     # recurs per union branch — the documented unmaterialized-gate shape;
     # at scale the assign input is a materialized narrow table)
     assert plan.count("_nearest_batches") == 1, plan
