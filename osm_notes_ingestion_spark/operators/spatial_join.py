@@ -26,10 +26,22 @@ pass (operators/fused.py), so both entry points share one assignment.
 
 At 100 TB this is a single map-only stage over the pages scan: no
 shuffle, no skew sensitivity (hot cells cost nothing extra — the cover
-rides along as a broadcast, never repartitioned by key). An explicit
-salted shuffle variant (`assign_countries_partitioned`) exists for the
-hypothetical case where the polygon dimension outgrows broadcast (e.g.
-admin-2 worldwide).
+rides along as a broadcast, never repartitioned by key).
+
+Two shuffle-side variants pick winners one way, independently of the
+kernel (the tests hold them equal to it): `_resolve_candidates` joins
+each point to its cell's priority-sorted candidate list and derives, in
+the JVM, the fallback (first full candidate, else NO_MATCH) and the
+contenders (partial candidates before it); `_first_contained_winner`
+then takes the first contender that contains the point.
+
+- `assign_countries_partitioned` joins on (cell, salt) so hot cells
+  split across tasks, and refines in one mapInArrow against the
+  broadcast `PolygonPack`; the candidates are broadcast too while they
+  fit under the 64 MB broadcast threshold.
+- `assign_countries_distributed` reads an executor-built cover and
+  refines cell-locally against clipped fragments: the only path with no
+  driver-resident geometry (admin-2 worldwide, parcel-scale dims).
 """
 
 from __future__ import annotations
@@ -37,7 +49,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
@@ -45,8 +56,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.cells import cell_col, encode
-from ..functions.geometry import PolygonPack
-from ..sources.polygons import PolygonIndex, cover_df
+from ..functions.geometry import PolygonPack, points_in_rings
+from ..sources.polygons import PolygonIndex, candidates_from_cover, cover_df
 
 NO_MATCH = -1  # reference: get_country returns -1 (…sql:32,223)
 
@@ -125,47 +136,39 @@ def _assign_block(lk: _CoverLookup, lats: np.ndarray, lons: np.ndarray, located:
 def _first_contained_winner(
     lons: np.ndarray,
     lats: np.ndarray,
-    cand_ids: "pd.Series | list",
+    contenders: "pa.ListArray | pa.ChunkedArray",
     fallback: np.ndarray,
     contains_fn,
 ) -> np.ndarray:
-    """Shared winner pick: per point, the FIRST candidate in its
-    (priority, country_id)-sorted list that contains it; else fallback.
+    """Shared winner pick for the shuffle-side paths: per row, the FIRST
+    entry of its contender list (`_resolve_candidates`' `_contender_ids`,
+    already in (priority, country_id) order) that contains the point;
+    else the row's fallback.
 
     contains_fn(cid, lons, lats) -> bool array — the only thing that
-    differs between the salted path's refine UDF (whole-polygon PIP)
-    and the distributed cell-fragment refine (clipped-fragment PIP).
-    Vectorized over all points listing each candidate — never per-row.
+    differs between the salted refine (whole-polygon PIP) and the
+    distributed cell-fragment refine (clipped-fragment PIP). Vectorized
+    over all rows listing each candidate — never per-row.
     """
-    n = len(lons)
-    lens = np.fromiter((len(c) for c in cand_ids), dtype=np.int64, count=n)
-    best_id = np.asarray(fallback, dtype=np.int64).copy()
-    if lens.sum() == 0:
-        return best_id
-    row_idx = np.repeat(np.arange(n), lens)
-    flat_ids = np.concatenate([np.asarray(c, dtype=np.int64) for c in cand_ids if len(c)])
-    pos_in_row = np.concatenate([np.arange(l) for l in lens if l])
-    contained = np.zeros(len(flat_ids), dtype=bool)
-    for cid in np.unique(flat_ids):
-        m = flat_ids == cid
-        contained[m] = contains_fn(int(cid), lons[row_idx[m]], lats[row_idx[m]])
-    best_pos = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-    order = np.lexsort((pos_in_row, row_idx))
-    r, p, i, c = row_idx[order], pos_in_row[order], flat_ids[order], contained[order]
-    sel = c & (p < best_pos[r])
-    np.minimum.at(best_pos, r[sel], p[sel])
-    hit = best_pos[r] == p
-    take = sel & hit
-    best_id[r[take]] = i[take]
-    return best_id
+    best = np.asarray(fallback, dtype=np.int64).copy()
+    ids = pc.list_flatten(contenders).to_numpy(zero_copy_only=False)
+    row = pc.list_parent_indices(contenders).to_numpy(zero_copy_only=False)
+    inside = np.zeros(len(ids), dtype=bool)
+    for cid in np.unique(ids):
+        m = ids == cid
+        inside[m] = contains_fn(int(cid), lons[row[m]], lats[row[m]])
+    # entries are flattened row by row in list order: the first
+    # contained entry of each row is its winner
+    won, first = np.unique(row[inside], return_index=True)
+    best[won] = ids[inside][first]
+    return best
 
 
 def _resolve_candidates(joined: DataFrame) -> DataFrame:
     """JVM-side resolution over the priority-sorted candidate array:
     best full candidate = first with full=true; contenders = partial
     candidates strictly before it in sort order. Adds _fallback,
-    _contender_ids, n_candidates, refined, for the distributed
-    (cell-fragment) assignment path."""
+    _contender_ids, n_candidates, refined, for both shuffle-side paths."""
     full_only = F.filter(F.col("cands"), lambda c: c["full"])
     best_full = F.when(F.size(full_only) > 0, F.element_at(full_only, 1))
     fallback = F.coalesce(best_full["country_id"], F.lit(NO_MATCH))
@@ -190,58 +193,6 @@ def _resolve_candidates(joined: DataFrame) -> DataFrame:
         .withColumn("n_candidates", F.coalesce(F.size("cands"), F.lit(0)))
         .withColumn("refined", F.col("lat").isNotNull() & (F.size("_contender_ids") > 0))
     )
-
-
-_SENTINEL_PRIORITY = 1 << 62  # larger than any real priority: min() never picks it
-
-
-def _make_refine_winner_udf(spark: SparkSession, pack: PolygonPack):
-    """Struct-returning refine for the salted path: given a point and its
-    (priority, country_id)-sorted partial-candidate list, return the
-    winning (priority, country_id) struct — or the sentinel when nothing
-    contains the point. Returning the struct in ONE expression matters:
-    an id-returning UDF whose output feeds both a filter and a projection
-    gets DUPLICATED by CollapseProject (two ArrowEvalPython stages = the
-    refine work done twice); a single-use struct output keeps exactly one
-    Arrow crossing per refined point."""
-    bc = spark.sparkContext.broadcast(pack)
-
-    @F.pandas_udf("priority long, country_id long")
-    def refine_w(lon: pd.Series, lat: pd.Series, plist: pd.Series) -> pd.DataFrame:
-        pk: PolygonPack = bc.value
-        idx_of = pk.index_of_id()
-        n = len(lon)
-        lons = lon.to_numpy(dtype=np.float64)
-        lats = lat.to_numpy(dtype=np.float64)
-
-        def _cid(d):
-            return int(d["country_id"]) if isinstance(d, dict) else int(d[1])
-
-        def _prio(d):
-            return int(d["priority"]) if isinstance(d, dict) else int(d[0])
-
-        cand_ids = [[_cid(d) for d in row] for row in plist]
-
-        def contains_fn(cid: int, plons: np.ndarray, plats: np.ndarray) -> np.ndarray:
-            return pk.contains(idx_of[cid], plons, plats)
-
-        best = _first_contained_winner(
-            lons, lats, cand_ids, np.full(n, NO_MATCH, dtype=np.int64), contains_fn
-        )
-        prio = np.full(n, _SENTINEL_PRIORITY, dtype=np.int64)
-        lens = np.fromiter((len(c) for c in cand_ids), dtype=np.int64, count=n)
-        if lens.sum():
-            row_idx = np.repeat(np.arange(n), lens)
-            flat_c = np.concatenate([np.asarray(c, dtype=np.int64) for c in cand_ids if len(c)])
-            flat_p = np.concatenate(
-                [np.asarray([_prio(d) for d in row], dtype=np.int64) for row in plist if len(row)]
-            )
-            m = flat_c == best[row_idx]
-            prio[row_idx[m]] = flat_p[m]
-        prio[best == NO_MATCH] = _SENTINEL_PRIORITY
-        return pd.DataFrame({"priority": prio, "country_id": best})
-
-    return refine_w
 
 
 def assign_countries(
@@ -322,7 +273,6 @@ def assign_countries_distributed(
     id_col: str = "id",
     lat_col: str = "lat",
     lon_col: str = "lon",
-    broadcast_cands: bool = True,
 ) -> DataFrame:
     """Assignment against a DISTRIBUTED cover table
     (sources/polygons.prep_polygons_distributed) — no driver-resident
@@ -331,10 +281,11 @@ def assign_countries_distributed(
     Same output contract as `assign_countries` (id, lat, lon, cell,
     country_id, n_candidates, refined). Differences in the plan:
 
+    - the cover is materialized once per call (local checkpoint), so
+      its per-feature prep runs once although both the candidates and
+      the fragments read it;
     - candidates come from a Spark aggregation over the cover table
-      (one prep-time shuffle), broadcast when `broadcast_cands` (admin-2
-      worldwide at level 9 still fits; flip off for parcel-scale dims
-      and let AQE plan the shuffle join);
+      (one prep-time shuffle), always broadcast to the points;
     - exact PIP refinement is CELL-LOCAL: points needing refinement
       cogroup with their cell's clipped polygon fragments
       (cover.frag) — one Arrow row per refined point plus one per
@@ -351,13 +302,7 @@ def assign_countries_distributed(
     independently of the broadcast kernel; tests/test_distributed_prep.py
     holds the two equal.
     """
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    from ..sources.polygons import candidates_from_cover
-
-    cands = candidates_from_cover(cover)
-    if broadcast_cands:
-        cands = F.broadcast(cands)
+    cover = cover.localCheckpoint(eager=True)
     pts = points.select(
         F.col(id_col).alias("id"),
         F.col(lat_col).alias("lat"),
@@ -366,7 +311,7 @@ def assign_countries_distributed(
         "cell",
         F.when(F.col("lat").isNotNull(), cell_col(F.col("lat"), F.col("lon"), level)),
     )
-    resolved = _resolve_candidates(pts.join(cands, "cell", "left"))
+    resolved = _resolve_candidates(pts.join(F.broadcast(candidates_from_cover(cover)), "cell", "left"))
 
     fast = resolved.where(~F.col("refined")).select(
         "id",
@@ -385,6 +330,7 @@ def assign_countries_distributed(
     )
     frags = cover.where(~F.col("full")).select("cell", "country_id", "frag")
 
+    out_ddl = "id long, lat double, lon double, cell long, country_id long, n_candidates int, refined boolean"
     out_schema = pa.schema([
         ("id", pa.int64()), ("lat", pa.float64()), ("lon", pa.float64()), ("cell", pa.int64()),
         ("country_id", pa.int64()), ("n_candidates", pa.int32()), ("refined", pa.bool_()),
@@ -396,8 +342,6 @@ def assign_countries_distributed(
     def refine_cell(pts: pa.Table, frag: pa.Table) -> pa.Table:
         if pts.num_rows == 0:
             return out_schema.empty_table()
-        from ..functions.geometry import points_in_rings
-
         frag_rings = {
             cid: [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in rings or []]
             for cid, rings in zip(frag["country_id"].to_pylist(), frag["frag"].to_pylist())
@@ -412,7 +356,7 @@ def assign_countries_distributed(
         best = _first_contained_winner(
             pts["lon"].to_numpy(),
             pts["lat"].to_numpy(),
-            pts["_contender_ids"].to_pylist(),
+            pts["_contender_ids"],
             pts["_fallback"].to_numpy(),
             contains_fn,
         )
@@ -425,7 +369,7 @@ def assign_countries_distributed(
     slow = (
         need.groupBy("cell")
         .cogroup(frags.groupBy("cell"))
-        .applyInArrow(refine_cell, schema=from_arrow_schema(out_schema))
+        .applyInArrow(refine_cell, schema=out_ddl)
     )
     return fast.select(
         "id", "lat", "lon", "cell", "country_id", F.col("n_candidates").cast("int"), "refined"
@@ -441,17 +385,26 @@ def assign_countries_partitioned(
     lat_col: str = "lat",
     lon_col: str = "lon",
 ) -> DataFrame:
-    """Shuffle-based variant for a polygon dimension too large to broadcast.
+    """Salted shuffle variant → (id, lat, lon, cell, country_id) for
+    points with a lat.
 
-    Points repartition by cell; hot cells (skew — the reference's
-    USA/Germany problem, sql/functionsProcess_31_organizeAreas_2DGrid.sql:26-42)
-    are handled two ways: AQE skew-join splitting PLUS an explicit salt —
-    the cover side is exploded ×salt_buckets so each (cell, salt) pair
-    co-locates with a slice of the hot cell's points. Winner selection is
-    a (priority, country_id) min-struct aggregation — partial-aggregatable,
-    so map-side combine shrinks the shuffle.
+    Hot cells (skew — the reference's USA/Germany problem,
+    sql/functionsProcess_31_organizeAreas_2DGrid.sql:26-42) are split by
+    an explicit salt, with AQE skew-join splitting as the backstop: the
+    priority-sorted candidate lists (`candidates_from_cover`) explode
+    ×salt_buckets and left-join the points on (cell, salt), the point's
+    salt being pmod(hash(id)), so each (cell, salt) pair co-locates with
+    a slice of a hot cell's points. Winners resolve as in the
+    distributed path: `_resolve_candidates` in the JVM, then one
+    mapInArrow runs `_first_contained_winner` against the broadcast
+    PolygonPack.
+
+    Geometry still lives on the driver: the PolygonPack is broadcast,
+    and so are the candidates while they fit under the 64 MB broadcast
+    threshold (then the points do not shuffle at all). Only
+    `assign_countries_distributed` keeps the dimension off the driver.
     """
-    cov = cover_df(spark, index).withColumn(
+    cands = candidates_from_cover(cover_df(spark, index)).withColumn(
         "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
     )
     pts = (
@@ -462,50 +415,29 @@ def assign_countries_partitioned(
         .withColumn("cell", cell_col(F.col("lat"), F.col("lon"), index.level))
         .withColumn("salt", (F.pmod(F.hash("id"), F.lit(salt_buckets))).cast("int"))
     )
-    cand = pts.join(cov, ["cell", "salt"], "inner")
+    resolved = _resolve_candidates(pts.join(cands, ["cell", "salt"], "left")).select(
+        "id", "lat", "lon", "cell", "_contender_ids", "_fallback"
+    )
+    schema = T.StructType(
+        resolved.schema.fields[:4] + [T.StructField("country_id", T.LongType(), False)]
+    )
+    bc = spark.sparkContext.broadcast(index.pack)
 
-    # same non-short-circuit hazard as the broadcast path: a
-    # when(full, ...).otherwise(refine(...)) ships EVERY candidate row
-    # through Arrow — split physically instead, so only partial-cell
-    # candidates pay for Python. And like the broadcast path, candidates
-    # are batched PER POINT before the Arrow crossing (VERDICT r2 #2
-    # wrong-list item): a point with k partial candidates costs ONE
-    # refine row carrying a k-list, not k single-candidate rows — the
-    # groupBy is on the already-salted join output, so hot-cell skew was
-    # handled upstream and this aggregation is per-point (unique keys).
-    refine_w = _make_refine_winner_udf(spark, index.pack)
-    full_w = (
-        cand.where(F.col("full"))
-        .groupBy("id")
-        .agg(F.min(F.struct("priority", "country_id")).alias("w"))
-    )
-    partial_lists = (
-        cand.where(~F.col("full"))
-        .groupBy("id", "lat", "lon")
-        .agg(F.sort_array(F.collect_list(F.struct("priority", "country_id"))).alias("plist"))
-    )
-    # ONE struct-valued refine call per point (first contained candidate
-    # in (priority, country_id) order == min-struct among contained
-    # ones); non-contained points yield the sentinel struct, which min()
-    # below never picks and the final coalesce maps to NO_MATCH
-    partial_w = partial_lists.select(
-        "id", refine_w(F.col("lon"), F.col("lat"), F.col("plist")).alias("w")
-    )
+    def refine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pk: PolygonPack = bc.value
+        idx_of = pk.index_of_id()
 
-    winners = (
-        full_w.unionByName(partial_w)
-        .groupBy("id")
-        .agg(F.min("w").alias("w"))
-        .select(
-            "id",
-            F.when(F.col("w.priority") == F.lit(_SENTINEL_PRIORITY), F.lit(NO_MATCH))
-            .otherwise(F.col("w.country_id"))
-            .alias("country_id"),
-        )
-    )
+        def contains_fn(cid: int, lons: np.ndarray, lats: np.ndarray) -> np.ndarray:
+            return pk.contains(idx_of[cid], lons, lats)
 
-    return (
-        pts.select("id", "lat", "lon", "cell")
-        .join(winners, "id", "left")
-        .withColumn("country_id", F.coalesce("country_id", F.lit(NO_MATCH)))
-    )
+        for b in batches:
+            best = _first_contained_winner(
+                pc.cast(b.column("lon"), pa.float64()).to_numpy(zero_copy_only=False),
+                pc.cast(b.column("lat"), pa.float64()).to_numpy(zero_copy_only=False),
+                b.column("_contender_ids"),
+                b.column("_fallback").to_numpy(zero_copy_only=False),
+                contains_fn,
+            )
+            yield pa.RecordBatch.from_arrays(b.columns[:4] + [pa.array(best)], names=schema.fieldNames())
+
+    return resolved.mapInArrow(refine, schema)

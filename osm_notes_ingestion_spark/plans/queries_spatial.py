@@ -92,12 +92,14 @@ def q_assign_country(spark, sf_dir):
     pinned floored-µdeg² metric — the reference's maritime-boundary
     assignment for ocean notes (functionsProcess_21:223 → maritime
     rows). Physical filter→kernel→union split keeps the nearest kernel's
-    Arrow volume to the ocean fraction; matched rows skip it."""
+    Arrow volume to the ocean fraction; matched rows skip it. Both
+    branches read one materialized assignment, so the pages are scanned,
+    extracted and assigned once."""
     from ..operators.nearest import nearest_polygon
 
     assigned = assign_countries(
         spark, _extracted(spark, sf_dir), _index(), keep_cols=("lat_e6", "lon_e6")
-    )
+    ).localCheckpoint(eager=True)
     fast = assigned.where(
         F.col("country_id").isNull() | (F.col("country_id") != -1)
     ).select(

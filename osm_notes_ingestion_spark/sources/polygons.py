@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.cells import encode
 from ..functions.geometry import PolygonPack, cover_polygon
 
 DEFAULT_COVER_LEVEL = 9
@@ -276,20 +275,10 @@ def prep_polygons_distributed(
 
 def candidates_from_cover(cover: DataFrame) -> DataFrame:
     """cell → priority-sorted candidate array, as a Spark aggregation
-    (the distributed twin of `_CoverLookup`'s driver-side numpy sort).
-    One shuffle at PREP time; the result joins (broadcast when it fits)
-    against the fact side, which never shuffles."""
+    (the shuffle-side twin of `_CoverLookup`'s driver-side numpy sort).
+    One shuffle at PREP time; both shuffle-side assignment paths
+    (operators/spatial_join) join the points against the result."""
     return cover.groupBy("cell").agg(
         F.sort_array(F.collect_list(F.struct("priority", "country_id", "full"))).alias("cands")
     )
 
-
-def hot_cells(index: PolygonIndex, lat: np.ndarray, lon: np.ndarray, top_n: int = 16) -> np.ndarray:
-    """Detect hot cells from a data sample — replaces the reference's
-    hand-tuned USA-first/Germany-first priority columns
-    (sql/functionsProcess_31_organizeAreas_2DGrid.sql:26-42) with measured
-    skew. Used to pick explicit salting keys for the non-broadcast join
-    path (operators/spatial_join.py::assign_countries_partitioned)."""
-    c = encode(lat, lon, index.level)
-    vals, counts = np.unique(c, return_counts=True)
-    return vals[np.argsort(-counts)[:top_n]]

@@ -1,16 +1,23 @@
 """The assignment kernel's output contract, on both entry points:
-assign_countries and fused_extract_assign (one mapInArrow each)."""
+assign_countries and fused_extract_assign (one mapInArrow each); and the
+shuffle-side paths' shared winner pick, _first_contained_winner."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from osm_notes_ingestion_spark.functions.cells import cell_col
 from osm_notes_ingestion_spark.operators.extract import extract_pages
 from osm_notes_ingestion_spark.operators.fused import fused_extract_assign
-from osm_notes_ingestion_spark.operators.spatial_join import NO_MATCH, assign_countries
+from osm_notes_ingestion_spark.operators.spatial_join import (
+    NO_MATCH,
+    _first_contained_winner,
+    assign_countries,
+)
 from osm_notes_ingestion_spark.sources.polygons import prep_polygons
 from osm_notes_ingestion_spark.sources.synth import pages_df, world_polygons
 
@@ -53,3 +60,50 @@ def test_fused_cell_equals_assign_cell(spark, sf_dir):
     decl = assign_countries(spark, extract_pages(pages), index).select("id", "cell", "country_id")
     assert fused.exceptAll(decl).count() == 0
     assert decl.exceptAll(fused).count() == 0
+
+
+def _bitmask_contains(calls):
+    """contains_fn for hand-built cases: a point's lon is the bitmask of
+    the candidate ids that contain it."""
+
+    def contains_fn(cid, lons, lats):
+        calls.append(cid)
+        return (lons.astype(np.int64) >> cid) & 1 == 1
+
+    return contains_fn
+
+
+def test_first_contained_winner_takes_first_contained_entry():
+    cases = [  # (contender ids in list order, ids containing the point, fallback, winner)
+        ([], [2], 7, 7),  # empty list keeps the fallback
+        ([2], [2], 7, 2),  # a contained partial listed before the fallback wins
+        ([4], [], 7, 7),  # a partial that does not contain the point leaves it
+        ([5, 2], [2, 5], 7, 5),  # two contain it: the first in the list wins
+        ([3, 6], [6], NO_MATCH, 6),
+        ([1], [], NO_MATCH, NO_MATCH),
+    ]
+    lists = [[9, 9]] + [c[0] for c in cases]  # a leading row, sliced away
+    contenders = pa.array(lists, pa.list_(pa.int64())).slice(1)
+    lons = np.array([float(sum(1 << c for c in c_[1])) for c_ in cases])
+    fallback = np.array([c[2] for c in cases], dtype=np.int64)
+    want = [c[3] for c in cases]
+    calls = []
+    got = _first_contained_winner(lons, np.zeros(len(cases)), contenders, fallback, _bitmask_contains(calls))
+    assert got.tolist() == want
+    assert sorted(calls) == [1, 2, 3, 4, 5, 6]  # one vectorized test per candidate id
+    assert fallback.tolist() == [c[2] for c in cases]  # the fallback array is not written
+    # the cogroup refine passes its column as a ChunkedArray
+    chunked = pa.chunked_array([contenders.slice(0, 2), contenders.slice(2)])
+    got = _first_contained_winner(lons, np.zeros(len(cases)), chunked, fallback, _bitmask_contains([]))
+    assert got.tolist() == want
+
+
+def test_first_contained_winner_without_contenders():
+    calls = []
+    fallback = np.array([3, NO_MATCH, 4], dtype=np.int64)
+    got = _first_contained_winner(
+        np.full(3, 255.0), np.zeros(3), pa.array([[], [], []], pa.list_(pa.int64())),
+        fallback, _bitmask_contains(calls),
+    )
+    assert got.tolist() == [3, NO_MATCH, 4]
+    assert calls == []

@@ -184,24 +184,27 @@ def test_ivf_probe_join_is_broadcast(spark):
 
 
 def test_salted_refine_groups_candidates_per_point(spark, sf_dir):
-    """Per-point refinement in the salted variant (VERDICT r2 #5): the
-    Arrow refine stage consumes the per-point GROUPED candidate list —
-    an aggregate (collect_list) feeds the single ArrowEvalPython — so a
-    point with k partial candidates crosses Arrow once, not k times."""
+    """Per-point refinement in the salted variant: the JVM resolves each
+    point's candidate list (`_resolve_candidates`), and ONE MapInArrow
+    refine reads the per-point contender list — a point with k partial
+    candidates crosses Arrow once, not k times. No pandas UDF, no branch
+    union, no aggregation joined back by id."""
     from osm_notes_ingestion_spark.operators.spatial_join import (
         assign_countries_partitioned,
     )
 
+    spark.catalog.clearCache()
     index = prep_polygons(world_polygons(), level=7)
     df = assign_countries_partitioned(
         spark, extract_pages(pages_df(spark, sf_dir)), index
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    # the refine input is the grouped list aggregation
-    arrow_idx = plan.index("ArrowEvalPython")
-    below_arrow = plan[arrow_idx:]
-    assert "collect_list" in below_arrow, "refine must read the per-point candidate list"
+    assert plan.count("MapInArrow refine(") == 1, plan
+    refine_args = plan[plan.index("MapInArrow refine(") :].split("\n", 1)[0]
+    assert "_contender_ids" in refine_args, "refine must read the per-point contender list"
+    assert "ArrowEvalPython" not in plan
+    assert "Union" not in plan
+    assert "SortMergeJoin" not in plan
 
 
 def test_salted_equals_broadcast_path(spark, sf_dir):
@@ -324,10 +327,10 @@ def test_nearest_leg_arrow_is_on_filtered_branch(spark, sf_dir):
         .executedPlan()
         .toString()
     )
-    # the nearest kernel appears EXACTLY once (extraction's mapInArrow
-    # recurs per union branch — the documented unmaterialized-gate shape;
-    # at scale the assign input is a materialized narrow table)
+    # the nearest kernel appears EXACTLY once, and both branches read the
+    # materialized assignment: no page scan is planned again per branch
     assert plan.count("_nearest_batches") == 1, plan
+    assert "FileScan parquet" not in plan, plan
     assert "= -1)" in plan  # ...and it sits above the NO_MATCH filter
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
