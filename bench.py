@@ -234,7 +234,7 @@ def main() -> None:
     )
 
     # tiles_z4 / knn over the SAME materialized extracted table: the
-    # operator under test (pyramid rollup / ring expansion), not a
+    # operator under test (tile rollup / ring expansion), not a
     # third+fourth re-run of the extraction kernel. Identical logical
     # query to the registry twins, production input shape.
     from osm_notes_ingestion_spark.operators.knn import knn

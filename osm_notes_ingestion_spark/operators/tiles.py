@@ -4,12 +4,11 @@ Reference analog: the WMS render layer — wms.notes_wms point table +
 GeoServer tiling + year-bucket SLD rules (sql/wms/prepareDatabase.sql:32-60,
 sld/OpenNotes.sld:15-203). The engine materializes the rollup itself.
 
-Scale design: the raw points are aggregated ONCE at the finest requested
-zoom (single shuffle, map-side partial aggregation shrinks it); every
-coarser zoom is derived from the finest tile table by integer shifts
-(tile z−1 = sum of its 4 z children) — the multi-zoom pyramid never
-touches the fact table again. At 100 TB the z-level pyramid is built
-from a table of ≤ 4^z rows, which is negligible.
+Scale design: the multi-zoom count rollup (tile_counts) is one
+aggregation over the fact table and one shuffle of tile rows, never of
+fact rows. The distinct pyramids (tile_distinct, tile_distinct_hll)
+merge up zoom by zoom instead: their rows carry 4 KB bitmaps or
+sketches, where a ×zooms multiplier on the shuffle is real.
 """
 
 from __future__ import annotations
@@ -30,7 +29,6 @@ def tile_counts(
     lat_col: str = "lat",
     lon_col: str = "lon",
     extra_dims: tuple[str, ...] = (),
-    strategy: str = "pyramid",
 ) -> DataFrame:
     """(z, x, y, [extra_dims...], cnt) for every zoom in [min_zoom, max_zoom].
 
@@ -38,60 +36,26 @@ def tile_counts(
     the analog of the reference's year_created_at/year_closed_at buckets
     (sql/wms/prepareDatabase.sql:33-40).
 
-    strategy:
-      "pyramid"  — aggregate once at max_zoom, derive parents by integer
-        shifts over the tiny tile table. Minimum shuffle volume; one
-        (cheap) stage per zoom level.
-      "exploded" — compute the finest tile JVM-side, explode each row to
-        all requested zooms, aggregate once. ONE stage total; map-side
-        partial aggregation caps the shuffle at (distinct tiles per
-        partition × zooms), so it stays scale-sane. Preferred when stage
-        scheduling latency dominates (interactive/small jobs).
-    Both produce identical results (asserted in tests).
+    One aggregation: each point's finest (x, y) is computed in the JVM,
+    exploded to its ancestor at every zoom (tile at z = finest tile >>
+    (max_zoom − z)), and counted by one groupBy(z, x, y, *extra_dims).
+    After map-side partial aggregation the one shuffle carries at most
+    (zooms × distinct finest tiles) rows per input partition — bounded
+    by the tile grid, not by the fact table.
     """
     pts = points.where(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
-    if strategy == "exploded":
-        zooms = list(range(min_zoom, max_zoom + 1))
-        fx = tile_x_col(F.col(lon_col), max_zoom)
-        fy = tile_y_col(F.col(lat_col), max_zoom)
-        exploded = pts.select(
-            F.explode(F.array(*[F.lit(z) for z in zooms])).alias("z"),
-            fx.alias("_x"),
-            fy.alias("_y"),
-            *[F.col(c) for c in extra_dims],
-        ).select(
-            "z",
-            F.expr(f"shiftright(_x, {max_zoom} - z)").alias("x"),
-            F.expr(f"shiftright(_y, {max_zoom} - z)").alias("y"),
-            *extra_dims,
-        )
-        return exploded.groupBy("z", "x", "y", *extra_dims).agg(F.count("*").alias("cnt"))
-    finest = (
-        pts.select(
-            F.lit(max_zoom).alias("z"),
-            tile_x_col(F.col(lon_col), max_zoom).alias("x"),
-            tile_y_col(F.col(lat_col), max_zoom).alias("y"),
-            *[F.col(c) for c in extra_dims],
-        )
-        .groupBy("z", "x", "y", *extra_dims)
-        .agg(F.count("*").alias("cnt"))
+    exploded = pts.select(
+        F.explode(F.array(*[F.lit(z) for z in range(min_zoom, max_zoom + 1)])).alias("z"),
+        tile_x_col(F.col(lon_col), max_zoom).alias("_x"),
+        tile_y_col(F.col(lat_col), max_zoom).alias("_y"),
+        *[F.col(c) for c in extra_dims],
+    ).select(
+        "z",
+        F.expr(f"shiftright(_x, {max_zoom} - z)").alias("x"),
+        F.expr(f"shiftright(_y, {max_zoom} - z)").alias("y"),
+        *extra_dims,
     )
-    levels = [finest]
-    cur = finest
-    for z in range(max_zoom - 1, min_zoom - 1, -1):
-        cur = (
-            cur.select(
-                F.lit(z).alias("z"),
-                F.shiftright("x", 1).alias("x"),
-                F.shiftright("y", 1).alias("y"),
-                *[F.col(c) for c in extra_dims],
-                "cnt",
-            )
-            .groupBy("z", "x", "y", *extra_dims)
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        levels.append(cur)
-    return reduce(DataFrame.unionByName, levels)
+    return exploded.groupBy("z", "x", "y", *extra_dims).agg(F.count("*").alias("cnt"))
 
 
 def check_pyramid(tiles: DataFrame) -> DataFrame:

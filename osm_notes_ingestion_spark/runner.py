@@ -11,7 +11,7 @@ Usage (north rule: `spark-submit --py-files <zip> runner.py ...`):
 Jobs:
     assign — pages → extract → country assignment (+ metrics + lineage)
     fused  — one-Arrow-pass extract+assign (raw-throughput pipeline)
-    tiles  — assignment → z/x/y pyramid
+    tiles  — assignment → z/x/y counts at every zoom
     knn / knn_bulk — k nearest pages (driver list / query DataFrame)
     dedup — exact + MinHash-LSH near-dup pairs + cluster labels
     stream_dedup — incremental foreachBatch LSH over staged file drops
@@ -185,31 +185,29 @@ def main(argv: list[str] | None = None) -> None:
             assigned.write.mode("overwrite").parquet(f"{args.output}/assignments")
             store.write_snapshot(spark.read.parquet(f"{args.output}/assignments"))
         else:
-            assigned = assign_countries(spark, ext, index)
+            # materialized once: the write, the metrics and the lineage
+            # read the checkpoint, which keeps the producer's partition ids
+            assigned = assign_countries(spark, ext, index).localCheckpoint(eager=True)
             assigned.write.mode("overwrite").parquet(f"{args.output}/assignments")
-            # from the written table: the lazy plan would extract and
-            # assign again; lineage keeps the producer's partition ids
-            mlog.log_stage(
-                run_id,
-                "assignment_metrics",
-                assignment_metrics(spark.read.parquet(f"{args.output}/assignments")),
-            )
+            mlog.log_stage(run_id, "assignment_metrics", assignment_metrics(assigned))
             mlog.log_stage(run_id, "lineage", partition_lineage(assigned))
         mlog.log_stage(run_id, "extraction_metrics", extraction_metrics(ext))
     elif args.job == "fused":
         # the raw-throughput pipeline: one Arrow pass, no second UDF stage
         from .operators.fused import fused_extract_assign
 
-        assigned = fused_extract_assign(spark, pages, index)
-        assigned.select("id", "url", "lat", "lon", "cell", "country_id").write.mode(
-            "overwrite"
-        ).parquet(f"{args.output}/assignments")
+        assigned = (
+            fused_extract_assign(spark, pages, index)
+            .select("id", "url", "lat", "lon", "cell", "country_id")
+            .localCheckpoint(eager=True)
+        )
+        assigned.write.mode("overwrite").parquet(f"{args.output}/assignments")
         mlog.log_stage(run_id, "lineage", partition_lineage(assigned))
     elif args.job == "tiles":
         assigned = assign_countries(spark, ext, index)
         tiles = tile_counts(
             assigned.where(F.col("lat").isNotNull()), max_zoom=args.max_zoom, min_zoom=args.min_zoom
-        )
+        ).localCheckpoint(eager=True)
         tiles.write.mode("overwrite").parquet(f"{args.output}/tiles")
         mlog.log_stage(run_id, "lineage", partition_lineage(tiles, ("z",)))
     elif args.job == "zorder":

@@ -95,32 +95,59 @@ def test_incremental_runner_watermark(spark, index, sf_dir, tmp_path):
     assert _as_map(store.latest(spark)) == full
 
 
-def test_run_batch_assigns_once(spark, index, sf_dir, tmp_path):
-    """One run_batch call runs the assignment kernel in exactly one SQL
-    execution (the snapshot write), read from Spark's SQL status store:
-    counting the unpersisted merge as well would run it twice. The kernel
-    is told apart from extraction (also a MapInArrow) by its function."""
+def _status_store(spark):
+    """Spark's SQL status store (with its Scala collection converter),
+    once every queued listener event has been applied."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
-    status = spark._jsparkSession.sharedState().statusStore()
+    return conv, spark._jsparkSession.sharedState().statusStore()
 
-    def executions():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return [e.executionId() for e in conv.asJava(status.executionsList())]
 
-    def runs_assign(eid):
-        return any(
+def _last_execution(spark):
+    conv, status = _status_store(spark)
+    return max((e.executionId() for e in conv.asJava(status.executionsList())), default=-1)
+
+
+def _assigning_executions(spark, after):
+    """Ids of the SQL executions after `after` whose plan runs the
+    assignment kernel. The kernel is told apart from extraction (also a
+    MapInArrow) by its function."""
+    conv, status = _status_store(spark)
+    return [
+        eid
+        for eid in (e.executionId() for e in conv.asJava(status.executionsList()))
+        if eid > after
+        and any(
             n.name() == "MapInArrow" and n.desc().startswith("MapInArrow assign(")
             for n in conv.asJava(status.planGraph(eid).allNodes())
         )
+    ]
 
+
+def test_run_batch_assigns_once(spark, index, sf_dir, tmp_path):
+    """One run_batch call runs the assignment kernel in exactly one SQL
+    execution (the snapshot write): counting the unpersisted merge as
+    well would run it twice."""
     runner = IncrementalRunner(spark, index, SnapshotStore(str(tmp_path / "once")))
     pages = pages_df(spark, sf_dir)
     for _ in range(2):  # first batch, then one merging into a snapshot
-        before = max(executions(), default=-1)
+        before = _last_execution(spark)
         r = runner.run_batch(pages)
         assert r.n_assigned == pages.count()
-        assigning = [eid for eid in executions() if eid > before and runs_assign(eid)]
+        assigning = _assigning_executions(spark, before)
         assert len(assigning) == 1, assigning
+
+
+def test_runner_assign_job_assigns_once(spark, sf_dir, tmp_path):
+    """The runner's --job assign evaluates its plan once: the write, the
+    assignment metrics and the partition lineage all read one
+    materialized result instead of re-running extraction and assignment."""
+    from osm_notes_ingestion_spark import runner
+
+    before = _last_execution(spark)
+    runner.main(["--job", "assign", "--sf-dir", sf_dir, "--output", str(tmp_path / "out")])
+    assigning = _assigning_executions(spark, before)
+    assert len(assigning) == 1, assigning
 
 
 def test_missing_children_block_watermark_advance(spark, index, sf_dir, tmp_path):

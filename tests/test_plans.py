@@ -69,6 +69,24 @@ def test_assignment_has_no_shuffle(assigned_plan):
     assert all("hashpartitioning" not in s and "rangepartitioning" not in s for s in shuffles), shuffles
 
 
+def test_tile_rollup_is_one_shuffle(spark, sf_dir):
+    """A nine-zoom count rollup is one aggregation: each point explodes
+    to every zoom map-side, so the plan has one shuffle, no per-zoom
+    union, and one scan of the fact table."""
+    import re
+
+    from osm_notes_ingestion_spark.operators.tiles import tile_counts
+
+    pts = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        (F.col("event_id") % 180 - 90).cast("double").alias("lat"),
+        (F.col("event_id") % 360 - 180).cast("double").alias("lon"),
+    )
+    plan = tile_counts(pts, max_zoom=8)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"(?<![A-Za-z])Exchange ", plan)) == 1, plan
+    assert "Union" not in plan, plan
+    assert plan.count("FileScan parquet") == 1, plan
+
+
 def test_watermark_filter_pushdown(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").where(
         F.col("ts") > F.lit("2024-01-05 00:00:00")

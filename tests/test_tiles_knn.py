@@ -82,12 +82,20 @@ def test_knn_wraps_antimeridian(spark):
     assert set(res["id"]) == {1, 2}
 
 
-def test_exploded_strategy_equals_pyramid(pts):
-    a = tile_counts(pts, max_zoom=6, min_zoom=2).toPandas()
-    b = tile_counts(pts, max_zoom=6, min_zoom=2, strategy="exploded").toPandas()
-    ka = a.set_index(["z", "x", "y"])["cnt"].sort_index()
-    kb = b.set_index(["z", "x", "y"])["cnt"].sort_index()
-    assert ka.equals(kb)
+def test_tile_counts_extra_dims_vs_numpy(pts):
+    """Every zoom of a multi-zoom rollup with an extra grouping dim equals
+    numpy binning at that zoom, grouped by the same dim."""
+    with_dim = pts.withColumn("g", F.col("id") % 3)
+    tiles = tile_counts(with_dim, max_zoom=6, min_zoom=0, extra_dims=("g",)).toPandas()
+    pdf = with_dim.toPandas()
+    assert sorted(tiles["z"].unique()) == list(range(7))
+    for z in range(7):
+        x, y = tile_xy_np(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), z)
+        exp = pd.DataFrame({"x": x, "y": y, "g": pdf["g"]}).value_counts().sort_index()
+        got = tiles[tiles["z"] == z].set_index(["x", "y", "g"])["cnt"].sort_index()
+        assert got.size == exp.size, f"z={z}: {got.size} tiles vs {exp.size}"
+        assert (got.index == exp.index).all(), f"z={z} tile mismatch"
+        assert (got.values == exp.values).all(), f"z={z} count mismatch"
 
 
 def test_merge_tile_counts_with_retraction(spark):
