@@ -179,6 +179,8 @@ def main(argv: list[str] | None = None) -> None:
     index = prep_polygons(polys, level=args.cover_level)
 
     if args.job == "assign":
+        # cached: the assignment and extraction_metrics read one extraction
+        ext.persist()
         if args.resume:
             store = SnapshotStore(args.snapshot_root or f"{args.output}/snapshots")
             assigned = resume_assignments(spark, ext, index, store, verify_sample_mod=100)
@@ -192,6 +194,7 @@ def main(argv: list[str] | None = None) -> None:
             mlog.log_stage(run_id, "assignment_metrics", assignment_metrics(assigned))
             mlog.log_stage(run_id, "lineage", partition_lineage(assigned))
         mlog.log_stage(run_id, "extraction_metrics", extraction_metrics(ext))
+        ext.unpersist()
     elif args.job == "fused":
         # the raw-throughput pipeline: one Arrow pass, no second UDF stage
         from .operators.fused import fused_extract_assign

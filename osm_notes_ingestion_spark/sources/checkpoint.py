@@ -30,6 +30,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.spatial_join import assign_countries
 from ..streaming.store import local_path
@@ -45,7 +46,15 @@ class SnapshotStore:
         snap_id = f"{kind}-{uuid.uuid4().hex[:12]}"
         path = os.path.join(self.root, snap_id)
         df.write.mode("overwrite").parquet(path)
-        rec = {"snapshot_id": snap_id, "kind": kind, "path": path, "committed_at": time.time()}
+        rec = {
+            "snapshot_id": snap_id,
+            "kind": kind,
+            "path": path,
+            "committed_at": time.time(),
+            # read back with this schema: inferring it from the footers
+            # costs a Spark job per read
+            "schema": df.schema.json(),
+        }
         # heal a torn tail first: a previous writer that crashed mid-line
         # left an unterminated partial record (provably uncommitted — the
         # newline IS the commit). Truncate it back to the last complete
@@ -93,7 +102,7 @@ class SnapshotStore:
         snaps = self.snapshots(kind)
         if not snaps:
             return None
-        return spark.read.parquet(snaps[-1]["path"])
+        return _read(spark, snaps[-1])
 
     def read_snapshot(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
         """Time travel by snapshot id (≈ Iceberg `VERSION AS OF`).
@@ -103,8 +112,17 @@ class SnapshotStore:
         kinds (write_snapshot accepts arbitrary kind strings)."""
         for r in self._records():
             if r.get("snapshot_id") == snapshot_id:
-                return spark.read.parquet(r["path"])
+                return _read(spark, r)
         raise KeyError(f"unknown snapshot {snapshot_id!r}")
+
+
+def _read(spark: SparkSession, rec: dict) -> DataFrame:
+    """A snapshot with the schema its record carries; a record written
+    before schemas were recorded infers it from the parquet footers."""
+    reader = spark.read
+    if "schema" in rec:
+        reader = reader.schema(T.StructType.fromJson(json.loads(rec["schema"])))
+    return reader.parquet(rec["path"])
 
 
 def resume_assignments(

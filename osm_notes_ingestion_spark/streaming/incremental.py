@@ -11,6 +11,8 @@ equivalents:
    `full_resync_threshold` triggers a full recompute instead — the
    reference's MAX_NOTES=10k planet-resync switch
    (bin/process/processAPINotes.sh:655-659, etc/properties.sh:85-87).
+   A batch crosses into Python once: `fused_extract_assign` extracts and
+   assigns in one mapInArrow whose cached result every later step reads.
 
 2. `streaming_tile_counts` — true Structured Streaming: readStream over
    a parquet directory, event-time watermark, tumbling-window counts.
@@ -22,11 +24,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages
-from ..operators.spatial_join import assign_countries
+from ..operators.fused import fused_extract_assign
 from ..sources.checkpoint import SnapshotStore
 
 
@@ -70,49 +72,63 @@ class IncrementalRunner:
         the extraction-reject guard. A parent whose children have not
         arrived yet means the API slice was torn; advancing the watermark
         would skip the missing children forever.
+
+        Spark work per batch: the fused pass, cached and materialized by
+        one aggregate (row count, rejects, max warc_ts); the snapshot
+        write (previous snapshot anti-joined with the batch ids, union
+        the batch's assignments), a JVM-only job over the cache that
+        also counts the rows it writes (an `Observation`); the gap join
+        when `children` is given. `batch.count()` runs first only when
+        `full_resync_threshold` is set.
         """
         batch = pages
         if self.watermark is not None:
             batch = batch.where(F.col("warc_ts") > F.lit(self.watermark))
-        n_input = batch.count()
+        n_input = None
+        full_resync = False
+        if self.full_resync_threshold is not None:
+            # the resync decision needs the batch size before any work
+            n_input = batch.count()
+            full_resync = n_input >= self.full_resync_threshold
+            if full_resync:
+                batch = pages  # recompute everything (planet-resync analog)
 
-        full_resync = (
-            self.full_resync_threshold is not None and n_input >= self.full_resync_threshold
+        # the batch's one Python pass; everything below reads the cache
+        done = (
+            fused_extract_assign(self.spark, batch, self.index)
+            .select("id", "country_id", "rejected", "warc_ts")
+            .persist()
         )
-        if full_resync:
-            batch = pages  # recompute everything (planet-resync analog)
+        # quality gates, both required to advance:
+        # 1. extraction health: % of rows rejected by coordinate validation
+        # 2. (reference's criterion) integrity gap: % of batch parents
+        #    with NO child rows — merge.gap_stats, the J5 anti-join
+        gates = done.agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("rejected").cast("long")).alias("rej"),
+            F.max("warc_ts").alias("maxts"),
+        ).collect()[0]
+        if n_input is None:
+            n_input = gates.n
 
-        # several actions read the extracted batch (assignment, snapshot
-        # write, health gates, integrity gap) — persist so the Arrow
-        # extraction pass runs once, not once per action
-        ext = extract_pages(batch).persist()
-        assigned = assign_countries(self.spark, ext, self.index).select("id", "country_id")
-
+        assigned = done.select("id", "country_id")
         prev = self.store.latest(self.spark)
         if prev is not None and not full_resync:
             keep = prev.select("id", "country_id").join(assigned.select("id"), "id", "left_anti")
             merged = keep.unionByName(assigned)
         else:
             merged = assigned
-        self.store.write_snapshot(merged)
-        # from the snapshot's footers: counting `merged` reruns the assignment
-        n_assigned = self.store.latest(self.spark).count()
+        # counted as it is written: no job reads the snapshot back
+        written = Observation("snapshot")
+        self.store.write_snapshot(merged.observe(written, F.count(F.lit(1)).alias("n")))
+        n_assigned = written.get["n"]
 
-        # quality gates, both required to advance:
-        # 1. extraction health: % of rows rejected by coordinate validation
-        # 2. (reference's criterion) integrity gap: % of batch parents
-        #    with NO child rows — merge.gap_stats, the J5 anti-join
-        gates = ext.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("rejected").cast("long")).alias("rej"),
-            F.max("warc_ts").alias("maxts"),
-        ).collect()[0]
         rej_pct = (100.0 * (gates.rej or 0) / gates.n) if gates.n else 0.0
         gap_pct = 0.0
         if children is not None:
             from ..operators.merge import gap_stats
 
-            parents = ext.select(F.col("id").alias("_nk"))
+            parents = done.select(F.col("id").alias("_nk"))
             kids = children.select(F.col(child_key).alias("_nk"))
             gap_pct = float(
                 gap_stats(parents, kids, note_key="_nk").collect()[0].gap_pct or 0.0
@@ -125,7 +141,7 @@ class IncrementalRunner:
         )
         if advanced:
             self.watermark = max(filter(None, [self.watermark, gates.maxts]))
-        ext.unpersist()
+        done.unpersist()
         return IncrementalResult(
             n_input, n_assigned, before, self.watermark, advanced, full_resync, gap_pct
         )

@@ -108,46 +108,152 @@ def _last_execution(spark):
     return max((e.executionId() for e in conv.asJava(status.executionsList())), default=-1)
 
 
-def _assigning_executions(spark, after):
-    """Ids of the SQL executions after `after` whose plan runs the
-    assignment kernel. The kernel is told apart from extraction (also a
-    MapInArrow) by its function."""
+def _executions(spark, after):
+    """{execution id: [(node name, node description, output rows,
+    is a Python node)]} of the SQL executions after `after`.
+
+    A scan of a cached plan repeats that plan's nodes with the same
+    accumulators, but only the execution that filled the cache records
+    rows for them, so `rows` says which execution ran a node. A Python
+    node is one with a "time to run Python workers" metric."""
     conv, status = _status_store(spark)
+    out = {}
+    for e in conv.asJava(status.executionsList()):
+        eid = e.executionId()
+        if eid <= after:
+            continue
+        values = conv.asJava(status.executionMetrics(eid))
+        nodes = []
+        for n in conv.asJava(status.planGraph(eid).allNodes()):
+            metrics = {m.name(): values.get(m.accumulatorId()) for m in conv.asJava(n.metrics())}
+            rows = int((metrics.get("number of output rows") or "0").replace(",", ""))
+            nodes.append((n.name(), n.desc(), rows, "time to run Python workers" in metrics))
+        out[eid] = nodes
+    return out
+
+
+def _kernel_executions(spark, after, *kernels):
+    """Ids of the SQL executions after `after` in which a MapInArrow
+    running one of the `kernels` (by function name) produced rows."""
+    prefixes = tuple(f"MapInArrow {k}(" for k in kernels)
     return [
         eid
-        for eid in (e.executionId() for e in conv.asJava(status.executionsList()))
-        if eid > after
-        and any(
-            n.name() == "MapInArrow" and n.desc().startswith("MapInArrow assign(")
-            for n in conv.asJava(status.planGraph(eid).allNodes())
-        )
+        for eid, nodes in _executions(spark, after).items()
+        if any(name == "MapInArrow" and desc.startswith(prefixes) and rows for name, desc, rows, _ in nodes)
     ]
 
 
+def _warc_cutoffs(pages, n):
+    """The `n` warc_ts values that cut `pages` into n consecutive slices."""
+    ts = sorted(r.warc_ts for r in pages.select("warc_ts").collect())
+    return [ts[len(ts) * (k + 1) // n - 1] for k in range(n)]
+
+
 def test_run_batch_assigns_once(spark, index, sf_dir, tmp_path):
-    """One run_batch call runs the assignment kernel in exactly one SQL
-    execution (the snapshot write): counting the unpersisted merge as
-    well would run it twice."""
+    """One run_batch call makes one Python pass in two SQL executions:
+    the gates' aggregate, where exactly one Python node produces rows (the
+    fused extract+assign kernel), and the snapshot write, a JVM-only job
+    over the cached result that also counts what it writes."""
     runner = IncrementalRunner(spark, index, SnapshotStore(str(tmp_path / "once")))
-    pages = pages_df(spark, sf_dir)
-    for _ in range(2):  # first batch, then one merging into a snapshot
+    pages = pages_df(spark, sf_dir).cache()
+    for cut in _warc_cutoffs(pages, 2):  # first batch, then one merging into a snapshot
         before = _last_execution(spark)
-        r = runner.run_batch(pages)
-        assert r.n_assigned == pages.count()
-        assigning = _assigning_executions(spark, before)
-        assert len(assigning) == 1, assigning
+        runner.run_batch(pages.where(F.col("warc_ts") <= F.lit(cut)))
+        execs = _executions(spark, before)
+        assert len(execs) == 2, sorted(execs)
+        python = [
+            (eid, desc) for eid, nodes in execs.items() for _, desc, rows, py in nodes if py and rows
+        ]
+        assert len(python) == 1, python
+        assert _kernel_executions(spark, before, "assign", "extract_assign") == [python[0][0]]
+        writes = [
+            nodes for nodes in execs.values()
+            if any(name == "Execute InsertIntoHadoopFsRelationCommand" for name, *_ in nodes)
+        ]
+        assert len(writes) == 1
+        assert not [desc for _, desc, rows, py in writes[0] if py and rows]
+    pages.unpersist()
+
+
+@pytest.mark.parametrize("full_resync_threshold", [None, 10**9])
+def test_run_batch_slices_accumulate(spark, index, sf_dir, tmp_path, full_resync_threshold):
+    """Three consecutive slices, each fed as every page up to its cutoff:
+    n_input is the watermark-filtered count (whether or not the resync
+    check counts the batch first), n_assigned is cumulative, the watermark
+    follows the slices, an empty batch changes nothing, and the final
+    snapshot equals a one-shot assignment."""
+    pages = pages_df(spark, sf_dir).cache()
+    store = SnapshotStore(str(tmp_path / "slices"))
+    runner = IncrementalRunner(spark, index, store, full_resync_threshold=full_resync_threshold)
+    prev = None
+    for cut in _warc_cutoffs(pages, 3):
+        upto = pages.where(F.col("warc_ts") <= F.lit(cut))
+        fresh = upto if prev is None else upto.where(F.col("warc_ts") > F.lit(prev))
+        r = runner.run_batch(upto)
+        assert (r.n_input, r.n_assigned) == (fresh.count(), upto.count())
+        assert r.advanced and not r.full_resync
+        assert (r.watermark_before, r.watermark_after, runner.watermark) == (prev, cut, cut)
+        prev = cut
+    # nothing past the watermark: an empty batch keeps the snapshot and watermark
+    r = runner.run_batch(pages)
+    assert (r.n_input, r.n_assigned, r.advanced, runner.watermark) == (0, pages.count(), False, prev)
+    full = _as_map(
+        assign_countries(spark, extract_pages(pages), index).select("id", "country_id")
+    )
+    assert _as_map(store.latest(spark)) == full
+    pages.unpersist()
+
+
+def test_extraction_rejects_block_watermark_advance(spark, index, sf_dir, tmp_path):
+    """The extraction-reject gate: a batch whose rejected share exceeds
+    max_gap_pct leaves the watermark where it was, so the next run reads
+    the slice again."""
+    pages = pages_df(spark, sf_dir).cache()
+    first_cut, _ = _warc_cutoffs(pages, 2)
+    runner = IncrementalRunner(spark, index, SnapshotStore(str(tmp_path / "rejgate")))
+    assert runner.run_batch(pages.where(F.col("warc_ts") <= F.lit(first_cut))).advanced
+    rest = pages.where(F.col("warc_ts") > F.lit(first_cut))
+    assert extract_pages(rest).where("rejected").count() > 0  # synth pages carry rejects
+    runner.max_gap_pct = 0.0
+    r = runner.run_batch(pages)
+    assert r.n_input == rest.count()
+    assert not r.advanced and r.gap_pct == 0.0
+    assert (r.watermark_before, r.watermark_after, runner.watermark) == (first_cut,) * 3
+    pages.unpersist()
 
 
 def test_runner_assign_job_assigns_once(spark, sf_dir, tmp_path):
     """The runner's --job assign evaluates its plan once: the write, the
-    assignment metrics and the partition lineage all read one
-    materialized result instead of re-running extraction and assignment."""
+    assignment metrics, the partition lineage and extraction_metrics all
+    read materialized results instead of re-running extraction and
+    assignment."""
     from osm_notes_ingestion_spark import runner
 
+    spark.catalog.clearCache()  # a cached extraction of these pages (`ext`) would stand in
     before = _last_execution(spark)
     runner.main(["--job", "assign", "--sf-dir", sf_dir, "--output", str(tmp_path / "out")])
-    assigning = _assigning_executions(spark, before)
+    assigning = _kernel_executions(spark, before, "assign")
     assert len(assigning) == 1, assigning
+    extracting = _kernel_executions(spark, before, "extract")
+    assert len(extracting) == 1, extracting
+
+
+def test_runner_resume_job_extracts_once(spark, sf_dir, tmp_path):
+    """--job assign --resume extracts the pages once, both with no
+    snapshot yet and merging into the one the first run left: the
+    restore, the assignment and extraction_metrics read one cached
+    extraction."""
+    from osm_notes_ingestion_spark import runner
+
+    spark.catalog.clearCache()  # a cached extraction of these pages (`ext`) would stand in
+    argv = ["--job", "assign", "--resume", "--sf-dir", sf_dir, "--output", str(tmp_path / "out")]
+    for _ in range(2):
+        before = _last_execution(spark)
+        runner.main(argv)
+        extracting = _kernel_executions(spark, before, "extract")
+        assert len(extracting) == 1, extracting
+    assigned = spark.read.parquet(str(tmp_path / "out" / "assignments"))
+    assert assigned.count() == pages_df(spark, sf_dir).count()
 
 
 def test_missing_children_block_watermark_advance(spark, index, sf_dir, tmp_path):

@@ -17,6 +17,7 @@ drop-in replacement is verified against the same suite:
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
@@ -230,3 +231,38 @@ def test_kind_namespaces_are_isolated(spark, make_store):
     assert [r["snapshot_id"] for r in store.snapshots("assignments")] == [sa]
     assert [r["snapshot_id"] for r in store.snapshots("metrics")] == [sm]
     assert _vals(store.latest(spark, "metrics")) == [(0, 7)]
+
+
+def _jobs_in(spark, fn):
+    """fn's result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-read", "snapshot read")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup("snapshot-read"))
+
+
+def test_snapshot_reads_with_recorded_schema(spark, make_store):
+    """write_snapshot records the frame's schema and both reads use it
+    instead of inferring it from the footers (a Spark job per read); a
+    record written before schemas were recorded still reads, by
+    inference."""
+    store = make_store()
+    df = _df(spark, [4, 5])
+    sid = store.write_snapshot(df)
+    assert json.loads(store.snapshots()[-1]["schema"]) == json.loads(df.schema.json())
+    for read in (lambda: store.latest(spark), lambda: store.read_snapshot(spark, sid)):
+        snap, jobs = _jobs_in(spark, read)
+        assert jobs == 0 and snap.schema == df.schema
+        assert _vals(snap) == [(0, 4), (1, 5)]
+
+    with open(store.manifest) as f:
+        legacy = [json.loads(ln) for ln in f]
+    for rec in legacy:
+        del rec["schema"]
+    with open(store.manifest, "w") as f:
+        f.writelines(json.dumps(rec) + "\n" for rec in legacy)
+    snap, jobs = _jobs_in(spark, lambda: store.latest(spark))
+    assert jobs >= 1 and _vals(snap) == [(0, 4), (1, 5)]
