@@ -1,9 +1,9 @@
 """Headline benchmark. Prints ONE JSON line:
 {"metric": ..., "value": sec, "unit": "sec", "queries": {...}, "sf": ...,
- "pages_per_sec": ..., "cpus": ...}
+ "pages_per_sec": ..., "cpus": ..., "run_steal_pct": ...}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the cores this process may run on),
      SPARK_GRAFT_FANOUT (default 24 → 24× pages for the flagship assign),
      SPARK_GRAFT_TRIALS (default 3 → best-of-N per query).
 
@@ -17,10 +17,13 @@ Methodology:
 - an untimed warm pass runs the fused kernel on a CPUS-partition sample
   so ALL Python workers fork + import numpy/pandas + unpack the polygon
   broadcast before anything is timed (a limit(2000) warm pass only
-  touches one partition → 31 of 32 workers would cold-start inside the
+  touches one partition → all but one worker would cold-start inside the
   timed region, measuring fork latency instead of engine throughput);
 - best-of-N trials per query (steady-state, standard bench practice);
-  "value" is the sum of best times, per-trial lists are in "trials".
+  "value" is the sum of best times, per-trial lists are in "trials";
+- hypervisor steal over the run window is reported as host context, not
+  used to retry or reject trials: host noise is read through
+  perfbench's per-layer CPU and volume metrics (perfbench/README.md).
 """
 
 from __future__ import annotations
@@ -35,11 +38,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from osm_notes_ingestion_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 FANOUT = int(os.environ.get("SPARK_GRAFT_FANOUT", "24"))
-# 3 trials: the shared host's CPU steal varies 2-3× between windows
-# (BENCH/BASELINE.md session table); best-of-3 reliably lands one
-# representative steady-state measurement per query
 TRIALS = int(os.environ.get("SPARK_GRAFT_TRIALS", "3"))
 
 BENCH_QUERIES = [
@@ -72,80 +72,14 @@ def _steal_counters() -> tuple[int, int]:
         return -1, -1
 
 
-# One quiet-window threshold for the whole bench toolchain: a trial or
-# session is steal-QUALIFIED at run steal <= this. tools/scaling_bench.py
-# and tools/bench_hunt.py import it, so the hunt's early-stop target and
-# the baseline's "qualified" records can never drift apart.
-QUIET_STEAL_PCT = 1.5
-
-
-def membw_gbps(mb: int = 256, reps: int = 3) -> float:
-    """Single-thread numpy triad (a = b + c over ~`mb` MB arrays) → GB/s.
-
-    Co-tenant memory-bus contention is invisible to /proc/stat steal but
-    dominates this host's headline variance (BENCH/NOTES.md: 13
-    annotated sessions show the steal-quiet headline monotone in this
-    probe — ~9.6 s at 9.0 GB/s down to 12–14 s under 8.4). Measured
-    once before the trials and reported as membw_gbps so every captured
-    record can be placed on that curve. Best-of-`reps`: contention can
-    only lower a reading, never raise it.
-
-    UNIT CAVEAT: `a = b + c` allocates a fresh result each rep, so
-    first-touch page faults and zeroing are billed to the timed window —
-    the figure is a probe-specific RELATIVE index that systematically
-    understates true STREAM-triad bandwidth. Every recorded
-    probe_membw_gbps and every *_MIN_MEMBW_GBPS gate threshold is in
-    these same deflated units, so they compare against each other but
-    NOT against hardware-spec GB/s. Kept as-is deliberately: switching
-    to a preallocated out= triad would re-scale the unit and orphan the
-    session history in BENCH/*.jsonl.
-    """
-    import numpy as np
-
-    n = mb * 1024 * 1024 // 8
-    b = np.ones(n)
-    c = np.ones(n)
-    best = 0.0
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        a = b + c
-        dt = time.perf_counter() - t0
-        del a
-        # triad traffic: read b, read c, write a = 3 arrays × 8 B × n
-        best = max(best, 3 * 8 * n / dt / 1e9)
-    return best
-
-
-def best_of(
-    fn, n: int, max_extra: int = 2, quiet_pct: float = QUIET_STEAL_PCT
-) -> tuple[float, list[float], list[float]]:
-    """Best-of-N with steal-adaptive retries: steal is measured over each
-    trial's own window, and if even the BEST trial ran under >quiet_pct%
-    hypervisor steal, up to max_extra more trials run. Steal bursts on
-    this shared host last seconds-to-minutes (BENCH/BASELINE.md session
-    table: identical runs 2-3× apart), so a bounded retry reliably lands
-    one steady-state measurement where a fixed N can have all its trials
-    poisoned. Per-trial steal is reported alongside the times."""
+def best_of(fn, n: int) -> tuple[float, list[float]]:
+    """Run `fn` `n` times; return the best wall time and every trial's."""
     ts: list[float] = []
-    steals: list[float] = []
-    while True:
-        s0, j0 = _steal_counters()
+    for _ in range(n):
         t0 = time.perf_counter()
         fn()
-        dt = time.perf_counter() - t0
-        s1, j1 = _steal_counters()
-        if s0 >= 0 and s1 >= 0 and j1 > j0:
-            steals.append(round(100.0 * (s1 - s0) / (j1 - j0), 2))
-        else:
-            steals.append(-1.0)
-        ts.append(round(dt, 3))
-        if len(ts) >= n:
-            best_steal = steals[ts.index(min(ts))]
-            # unmeasurable steal (-1: no /proc/stat) is neutral, not
-            # contended — extras fire only on a MEASURED noisy window
-            if best_steal < 0 or best_steal <= quiet_pct or len(ts) >= n + max_extra:
-                break
-    return min(ts), ts, steals
+        ts.append(round(time.perf_counter() - t0, 3))
+    return min(ts), ts
 
 
 def main() -> None:
@@ -154,7 +88,6 @@ def main() -> None:
     from osm_notes_ingestion_spark.sources.polygons import prep_polygons
     from osm_notes_ingestion_spark.sources.synth import pages_df, world_polygons
 
-    bw = membw_gbps()
     steal0, total0 = _steal_counters()
     spark = get_spark(CPUS, "bench")
     # JVM warm (codegen/classloading)
@@ -191,18 +124,11 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     trials: dict[str, list[float]] = {}
-    trial_steal: dict[str, list[float]] = {}
 
     flagship = lambda: materialize(  # noqa: E731
         fused_extract_assign(spark, pages, index).select("id", "lat", "lon", "country_id")
     )
-    # the flagship is the headline pages/sec — one extra trial damps the
-    # shared-host steal noise documented in BENCH/BASELINE.md
-    (
-        timings["flagship_assign"],
-        trials["flagship_assign"],
-        trial_steal["flagship_assign"],
-    ) = best_of(flagship, max(TRIALS, 3))
+    timings["flagship_assign"], trials["flagship_assign"] = best_of(flagship, TRIALS)
 
     # assign_country: the declarative assign operator over a
     # MATERIALIZED extracted table (the production shape — extraction is
@@ -222,11 +148,7 @@ def main() -> None:
             "id", "lat", "lon", "lat_e6", "lon_e6", "has_coords", "rejected"
         ).write.mode("overwrite").parquet(extracted_path)
     extracted = spark.read.parquet(extracted_path)
-    (
-        timings["assign_country"],
-        trials["assign_country"],
-        trial_steal["assign_country"],
-    ) = best_of(
+    timings["assign_country"], trials["assign_country"] = best_of(
         lambda: materialize(
             assign_countries(spark, extracted, index).select("id", "country_id")
         ),
@@ -244,7 +166,7 @@ def main() -> None:
     from pyspark.sql import functions as F  # noqa: N812
 
     pts = extracted.where(F.col("has_coords"))
-    timings["tiles_z4"], trials["tiles_z4"], trial_steal["tiles_z4"] = best_of(
+    timings["tiles_z4"], trials["tiles_z4"] = best_of(
         lambda: materialize(
             tile_counts(pts, max_zoom=6, min_zoom=4)
             .where(F.col("z") == 4)
@@ -252,7 +174,7 @@ def main() -> None:
         ),
         TRIALS,
     )
-    timings["knn"], trials["knn"], trial_steal["knn"] = best_of(
+    timings["knn"], trials["knn"] = best_of(
         lambda: materialize(
             knn(spark, pts, _KNN_QUERIES, k=5, level=6, initial_radius=2).select(
                 "query_id", "rank", "id", "d2"
@@ -263,7 +185,7 @@ def main() -> None:
 
     for name in BENCH_QUERIES:
         fn, _sql = REGISTRY[name]
-        timings[name], trials[name], trial_steal[name] = best_of(
+        timings[name], trials[name] = best_of(
             lambda: materialize(fn(spark, SF_DIR)), TRIALS
         )
 
@@ -289,24 +211,14 @@ def main() -> None:
                 "bench_schema": 4,
                 "value": total,
                 "unit": "sec",
-                "value_semantics": "sum of per-query best-of-N trial times (N in 'trials'); assign_country, tiles_z4 and knn read a materialized extracted table (untimed prep), flagship_assign covers fused extract+assign; since schema 4 status_fold additionally computes the per-user sessionization digest its gate absorbed",
-                # hypervisor CPU steal: over this bench run's window, and
-                # cumulative since boot (scaling_bench convention) — the
-                # shared host's time-varying steal is the dominant noise
-                # source (BENCH/BASELINE.md session table)
+                "value_semantics": "sum of per-query best-of-N trial times (N = SPARK_GRAFT_TRIALS, a fixed count with no steal-triggered retries; every trial in 'trials'); assign_country, tiles_z4 and knn read a materialized extracted table (untimed prep), flagship_assign covers fused extract+assign; since schema 4 status_fold additionally computes the per-user sessionization digest its gate absorbed",
+                # hypervisor CPU steal over this bench run's window, and
+                # cumulative since boot (scaling_bench convention): host
+                # context for the record, like perfbench's host.steal_pct
                 "run_steal_pct": run_steal_pct,
                 "cum_steal_pct": cum_steal_pct,
-                # single-thread triad bandwidth measured just before the
-                # trials — places this record on the contention curve in
-                # BENCH/NOTES.md (steal-quiet headline is monotone in it)
-                "membw_gbps": round(bw, 2),
                 "queries": {k: round(v, 3) for k, v in timings.items()},
                 "trials": trials,
-                # steal measured over each trial's own window; best_of
-                # grants up to 2 extra trials when even the best trial
-                # was contended (>1.5% steal), so a burst mid-bench
-                # can't silently poison a query's recorded best
-                "trial_steal_pct": trial_steal,
                 "sf": SF_DIR.rstrip("/").split("sf")[-1],
                 "pages_per_sec": round(n_pages / timings["flagship_assign"], 1),
                 "n_pages": n_pages,

@@ -26,7 +26,9 @@ from osm_notes_ingestion_spark.streaming.incremental import (
 
 @pytest.fixture(scope="module")
 def ext(spark, sf_dir):
-    return extract_pages(pages_df(spark, sf_dir)).cache()
+    df = extract_pages(pages_df(spark, sf_dir)).cache()
+    yield df
+    df.unpersist()  # a later module's plan over the same pages must run its own extraction
 
 
 @pytest.fixture(scope="module")

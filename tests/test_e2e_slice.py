@@ -37,7 +37,9 @@ def brute_force_assign(lat: np.ndarray, lon: np.ndarray, polys: list[dict]) -> n
 
 @pytest.fixture(scope="module")
 def extracted(spark, sf_dir):
-    return extract_pages(pages_df(spark, sf_dir)).cache()
+    df = extract_pages(pages_df(spark, sf_dir)).cache()
+    yield df
+    df.unpersist()  # a later module's plan over the same pages must run its own extraction
 
 
 def test_extraction_finds_coords(extracted):

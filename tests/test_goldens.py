@@ -27,7 +27,9 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def ext(spark):
-    return extract_pages(pages_df(spark, SF)).cache()
+    df = extract_pages(pages_df(spark, SF)).cache()
+    yield df
+    df.unpersist()  # a later module's plan over the same pages must run its own extraction
 
 
 def test_golden_assignments(spark, ext):

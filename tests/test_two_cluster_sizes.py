@@ -1,10 +1,9 @@
 """North-rule pytest evidence: the SAME spark-submit job runs end to end
 at two cluster sizes (local[2] = N, local[8] = 4N workers) and produces
 IDENTICAL results. Throughput at the two levels (the ≥0.8 scaling
-efficiency criterion) is measured separately under pinned, steal-probed
-conditions by tools/scaling_bench.py / scaling_hunt.py and reported in
-BENCH/BASELINE.md — a correctness test on a shared host must not assert
-on wall-clock."""
+efficiency criterion) is measured separately under pinned conditions by
+tools/scaling_bench.py and reported in BENCH/BASELINE.md — a correctness
+test on a shared host must not assert on wall-clock."""
 
 import os
 import shutil
@@ -12,6 +11,7 @@ import subprocess
 import zipfile
 
 import duckdb
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
@@ -69,3 +69,32 @@ def test_same_results_at_two_cluster_sizes(tmp_path):
         assert os.path.exists(os.path.join(o, "metrics", "runs.jsonl"))
 
     shutil.rmtree(str(tmp_path), ignore_errors=True)
+
+
+class _Reached(Exception):
+    pass
+
+
+def test_scaling_bench_refuses_4n_beyond_the_host(monkeypatch):
+    """`taskset -c 0-7` succeeds on a 4-core host, so an unchecked 2→8
+    session would time "8 cores" on 4 and log a meaningless efficiency.
+    scaling_bench must refuse before it generates pages or runs a trial,
+    and must still start work when 4N fits."""
+    from tools import scaling_bench
+
+    def _work(*_args, **_kwargs):
+        raise _Reached
+
+    monkeypatch.setattr(scaling_bench, "ensure_pages", _work)
+    monkeypatch.setattr(scaling_bench, "run_once", _work)
+    monkeypatch.setattr(scaling_bench.os, "sched_getaffinity", lambda _pid: set(range(4)))
+    monkeypatch.setattr(scaling_bench.sys, "argv", ["scaling_bench.py"])
+
+    monkeypatch.setenv("SPARK_GRAFT_SCALING_N", "2")
+    with pytest.raises(SystemExit) as refused:
+        scaling_bench.main()
+    assert "SPARK_GRAFT_SCALING_N" in str(refused.value.code)
+
+    monkeypatch.setenv("SPARK_GRAFT_SCALING_N", "1")
+    with pytest.raises(_Reached):
+        scaling_bench.main()

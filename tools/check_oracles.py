@@ -55,7 +55,8 @@ def main(names: list[str]) -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    spark = get_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "8")), "check_oracles")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    spark = get_spark(cpus, "check_oracles")
 
     con = duckdb.connect()
     for t in TABLES:

@@ -14,7 +14,10 @@ BENCH/BASELINE.md for numbers):
   string-heavy work beyond ~16 hot threads (pure-pandas replica of the
   UDF also caps at ~2.1× from 8→32 procs), which would measure the
   machine, not the engine;
-- best of `trials` per level damps shared-box noise.
+- best of `trials` per level damps shared-box noise;
+- 4N must fit the cores this process may run on: `taskset -c 0-7`
+  succeeds on a 4-core host and silently runs "8 cores" on 4, so the
+  tool refuses before any work (set SPARK_GRAFT_SCALING_N=1 there).
 
 Efficiency = (T_N / T_4N) / 4  — perfect scaling gives 1.0.
 """
@@ -30,11 +33,11 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 GEN_TEMPLATE = r"""
-import sys
+import os, sys
 sys.path.insert(0, {repo!r})
 from osm_notes_ingestion_spark.session import get_spark
 from osm_notes_ingestion_spark.sources.synth import pages_df
-spark = get_spark(32, "scaling-gen")
+spark = get_spark(len(os.sched_getaffinity(0)), "scaling-gen")
 pages_df(spark, {sf_dir!r}, fanout={fanout}).write.mode("overwrite").parquet({pages_path!r})
 print(spark.read.parquet({pages_path!r}).count())
 """
@@ -104,13 +107,6 @@ def run_once(cpus: int, pages_path: str) -> dict:
 
 SESSIONS_LOG = os.path.join(REPO, "BENCH", "scaling_sessions.jsonl")
 
-# A headline session is steal-QUALIFIED when its whole-run steal is at
-# or under this — the same quiet threshold bench.py's steal-adaptive
-# best-of applies to individual trials (single source: bench.py, so the
-# hunt's early-stop target and these records can't drift).
-sys.path.insert(0, REPO)
-from bench import QUIET_STEAL_PCT  # noqa: E402
-
 
 def _cpu_steal_pct() -> float:
     """Hypervisor CPU-steal percentage since boot (/proc/stat) — annotates
@@ -128,10 +124,7 @@ def _cpu_steal_pct() -> float:
 
 def ensure_pages(pages_path: str) -> None:
     """Materialize the fanned-out pages parquet if it's not already
-    there (keyed on the _SUCCESS marker, so a torn write regenerates).
-    Shared with scaling_hunt, whose cheap per-window probe reads the
-    same path BEFORE any full session would have materialized it — a
-    cleaned /tmp otherwise bricks every probe."""
+    there (keyed on the _SUCCESS marker, so a torn write regenerates)."""
     if os.path.exists(os.path.join(pages_path, "_SUCCESS")):
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -151,6 +144,14 @@ def main() -> None:
     pages_path = os.environ.get("SPARK_GRAFT_PAGES_PATH", "/tmp/scaling_pages")
 
     if not report_only:
+        n_avail = len(os.sched_getaffinity(0))
+        if n_hi > n_avail:
+            sys.exit(
+                f"scaling_bench: 4N = {n_hi} cores (SPARK_GRAFT_SCALING_N={n_lo}) "
+                f"exceeds the {n_avail} cores this process may run on; taskset "
+                f"would run the 4N phase on fewer cores than it claims. Set "
+                f"SPARK_GRAFT_SCALING_N so that 4 × N <= {n_avail}."
+            )
         ensure_pages(pages_path)
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
@@ -339,90 +340,10 @@ Reference anchor: OSM-Notes-Ingestion assigns ~4.8M notes in 3 h on a
 at {n_hi} pinned cores sustains {report['n4_pages_per_sec']} pages/s
 INCLUDING html extraction; at 32 unpinned threads the flagship reaches
 ~1.15M pages/s on materialized parquet (bench.py).
-{_headline_sessions_md()}
+
 Generated by tools/scaling_bench.py on {report['timestamp']}.
 """
         )
-
-
-def _headline_sessions_md() -> str:
-    """Markdown section summarizing quiet-window HEADLINE bench sessions
-    (bench.py runs captured by tools/bench_hunt.py) — same shared-host
-    caveat as the scaling sessions, so the round's recorded BENCH number
-    can be read against steal-qualified evidence."""
-    log = os.path.join(REPO, "BENCH", "bench_sessions.jsonl")
-    if not os.path.exists(log):
-        return ""
-    rows = [json.loads(l) for l in open(log) if l.strip()]
-    if not rows:
-        return ""
-    # Records are kept PER bench_schema: schema changes re-scope what a
-    # query times (e.g. schema 3 moved tiles_z4/knn onto the
-    # pre-materialized extracted table), so values across schemas are
-    # not comparable and must not be ranked against each other.
-    # "Qualified" = run steal <= QUIET_STEAL_PCT, the same quiet
-    # threshold bench.py's steal-adaptive best-of uses for trials.
-    lines = "\n".join(
-        f"- {time.strftime('%Y-%m-%d %H:%M:%S', time.localtime(r['captured_unix']))}: "
-        f"headline {r['value']}s ({r.get('pages_per_sec', 0):.0f} pages/s flagship), "
-        f"run steal {r.get('run_steal_pct', '?')}%, "
-        f"probe steal {r.get('probe_steal_pct', '?')}%, "
-        f"schema {r.get('bench_schema', 1)}"
-        + (
-            f", probe membw {r['probe_membw_gbps']} GB/s"
-            if isinstance(r.get("probe_membw_gbps"), (int, float))
-            else ""
-        )
-        for r in rows
-    )
-    records = []
-    for schema in sorted({r.get("bench_schema", 1) for r in rows}):
-        in_schema = [r for r in rows if r.get("bench_schema", 1) == schema]
-        qual = [
-            r
-            for r in in_schema
-            if isinstance(r.get("run_steal_pct"), (int, float))
-            and 0 <= r["run_steal_pct"] <= QUIET_STEAL_PCT
-        ]
-        if qual:
-            b = min(qual, key=lambda r: r["value"])
-            records.append(
-                f"- schema {schema}: best qualified {b['value']}s at "
-                f"{b['run_steal_pct']}% run steal "
-                f"({len(qual)}/{len(in_schema)} sessions qualified)"
-            )
-        else:
-            b = min(in_schema, key=lambda r: r["value"])
-            records.append(
-                f"- schema {schema}: NO steal-qualified session "
-                f"(best unqualified {b['value']}s at "
-                f"{b.get('run_steal_pct', '?')}% run steal, "
-                f"{len(in_schema)} sessions)"
-            )
-    rec_md = "\n".join(records)
-    return f"""
-## Headline bench sessions (bench.py at sf0.1, 32 unpinned threads)
-
-Captured by tools/bench_hunt.py; every completed run is logged with its
-measured hypervisor-steal percentages AND its bench_schema. Sessions
-are comparable ONLY within one bench_schema (a schema bump re-scopes
-what a query times — bench.py's value_semantics field documents each),
-and a session is steal-QUALIFIED only when its whole-run steal is at or
-under the {QUIET_STEAL_PCT}% quiet threshold bench.py itself applies to
-trials. Steal is a necessary, not sufficient, quietness signal: co-tenant
-MEMORY-BANDWIDTH contention is invisible to /proc/stat steal, so a
-qualified session can still run slow (e.g. the 2026-08-18 evening
-windows: ~15.2s at <1% steal on code identical to the 10.779s capture).
-Since round 5 bench_hunt measures a single-thread numpy-triad bandwidth
-probe immediately before each bench (probe_membw_gbps below, where
-present) — the first annotated sessions read 4.3–8.2 GB/s and all ran
-12–14s despite low steal, pinning bus contention as the slow-window
-mechanism (see BENCH/NOTES.md).
-Records therefore read as best-qualified = least-contended observed
-window. Per-schema records:
-{rec_md}
-{lines}
-"""
 
 
 if __name__ == "__main__":
