@@ -283,7 +283,9 @@ def assign_countries_distributed(
 
     - the cover is materialized once per call (local checkpoint), so
       its per-feature prep runs once although both the candidates and
-      the fragments read it;
+      the fragments read it; the resolved points are materialized the
+      same way, so the points' plan (an extraction, say) runs once
+      although both the fast and the refined branch read them;
     - candidates come from a Spark aggregation over the cover table
       (one prep-time shuffle), always broadcast to the points;
     - exact PIP refinement is CELL-LOCAL: points needing refinement
@@ -311,7 +313,9 @@ def assign_countries_distributed(
         "cell",
         F.when(F.col("lat").isNotNull(), cell_col(F.col("lat"), F.col("lon"), level)),
     )
-    resolved = _resolve_candidates(pts.join(F.broadcast(candidates_from_cover(cover)), "cell", "left"))
+    resolved = _resolve_candidates(
+        pts.join(F.broadcast(candidates_from_cover(cover)), "cell", "left")
+    ).localCheckpoint(eager=True)
 
     fast = resolved.where(~F.col("refined")).select(
         "id",

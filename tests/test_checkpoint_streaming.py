@@ -393,3 +393,21 @@ def test_metrics_log_root_is_local(tmp_path, monkeypatch):
     with pytest.raises(ValueError, match="MetricsLog.*'s3a'"):
         MetricsLog("s3a://bucket/metrics")
     assert not (tmp_path / "s3a:").exists()
+
+
+def test_distributed_assign_extracts_once(spark, sf_dir):
+    """The distributed path's fast and refined branches read one
+    materialized points join: over extracted pages, one extraction node
+    produces rows in the whole query."""
+    from osm_notes_ingestion_spark.plans.queries_spatial import q_assign_country_distributed
+
+    spark.catalog.clearCache()  # a cached extraction of these pages (`ext`) would stand in
+    before = _last_execution(spark)
+    q_assign_country_distributed(spark, sf_dir).collect()
+    extracting = [
+        (eid, desc)
+        for eid, nodes in _executions(spark, before).items()
+        for name, desc, rows, _ in nodes
+        if name == "MapInArrow" and desc.startswith("MapInArrow extract(") and rows
+    ]
+    assert len(extracting) == 1, extracting
