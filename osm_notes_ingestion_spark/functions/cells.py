@@ -110,16 +110,20 @@ def ring_at_distance(cell: int, k: int) -> np.ndarray:
 def cell_col(lat: Column, lon: Column, level: int) -> Column:
     """JVM-side geocell encode — identical math to encode().
 
-    Stays inside whole-stage codegen: no Python in the per-row path.
+    NULL when either coordinate is NULL: Spark's greatest/least skip
+    nulls, so without the guard a missing coordinate clamps to grid
+    row/column 0. Stays inside whole-stage codegen: no Python in the
+    per-row path.
     """
     n = float(1 << level)
     nmax = (1 << level) - 1
     x = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)), F.lit(0)), F.lit(nmax))
     y = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n)), F.lit(0)), F.lit(nmax))
-    return (
+    return F.when(
+        lat.isNotNull() & lon.isNotNull(),
         (F.lit(level).cast("long") * F.lit(1 << LEVEL_SHIFT).cast("long"))
         + y.cast("long") * F.lit(1 << Y_SHIFT).cast("long")
-        + x.cast("long")
+        + x.cast("long"),
     )
 
 

@@ -28,20 +28,15 @@ At 100 TB this is a single map-only stage over the pages scan: no
 shuffle, no skew sensitivity (hot cells cost nothing extra — the cover
 rides along as a broadcast, never repartitioned by key).
 
-Two shuffle-side variants pick winners one way, independently of the
-kernel (the tests hold them equal to it): `_resolve_candidates` joins
-each point to its cell's priority-sorted candidate list and derives, in
-the JVM, the fallback (first full candidate, else NO_MATCH) and the
+One shuffle-side path, `assign_countries_distributed`, picks winners
+another way, independently of the kernel (the tests hold it equal to
+it): it reads an executor-built cover and refines cell-locally against
+clipped fragments, the only path with no driver-resident geometry
+(admin-2 worldwide, parcel-scale dims). `_resolve_candidates` joins each
+point to its cell's priority-sorted candidate list and derives, in the
+JVM, the fallback (first full candidate, else NO_MATCH) and the
 contenders (partial candidates before it); `_first_contained_winner`
 then takes the first contender that contains the point.
-
-- `assign_countries_partitioned` joins on (cell, salt) so hot cells
-  split across tasks, and refines in one mapInArrow against the
-  broadcast `PolygonPack`; the candidates are broadcast too while they
-  fit under the 64 MB broadcast threshold.
-- `assign_countries_distributed` reads an executor-built cover and
-  refines cell-locally against clipped fragments: the only path with no
-  driver-resident geometry (admin-2 worldwide, parcel-scale dims).
 """
 
 from __future__ import annotations
@@ -57,7 +52,7 @@ from pyspark.sql import types as T
 
 from ..functions.cells import cell_col, encode
 from ..functions.geometry import PolygonPack, points_in_rings
-from ..sources.polygons import PolygonIndex, candidates_from_cover, cover_df
+from ..sources.polygons import PolygonIndex, candidates_from_cover
 
 NO_MATCH = -1  # reference: get_country returns -1 (…sql:32,223)
 
@@ -140,15 +135,14 @@ def _first_contained_winner(
     fallback: np.ndarray,
     contains_fn,
 ) -> np.ndarray:
-    """Shared winner pick for the shuffle-side paths: per row, the FIRST
-    entry of its contender list (`_resolve_candidates`' `_contender_ids`,
+    """Winner pick for the shuffle-side path: per row, the FIRST entry
+    of its contender list (`_resolve_candidates`' `_contender_ids`,
     already in (priority, country_id) order) that contains the point;
     else the row's fallback.
 
-    contains_fn(cid, lons, lats) -> bool array — the only thing that
-    differs between the salted refine (whole-polygon PIP) and the
-    distributed cell-fragment refine (clipped-fragment PIP). Vectorized
-    over all rows listing each candidate — never per-row.
+    contains_fn(cid, lons, lats) -> bool array: the distributed refine
+    tests the candidate's clipped cell fragment. Vectorized over all
+    rows listing each candidate — never per-row.
     """
     best = np.asarray(fallback, dtype=np.int64).copy()
     ids = pc.list_flatten(contenders).to_numpy(zero_copy_only=False)
@@ -168,7 +162,7 @@ def _resolve_candidates(joined: DataFrame) -> DataFrame:
     """JVM-side resolution over the priority-sorted candidate array:
     best full candidate = first with full=true; contenders = partial
     candidates strictly before it in sort order. Adds _fallback,
-    _contender_ids, n_candidates, refined, for both shuffle-side paths."""
+    _contender_ids, n_candidates, refined, for the shuffle-side path."""
     full_only = F.filter(F.col("cands"), lambda c: c["full"])
     best_full = F.when(F.size(full_only) > 0, F.element_at(full_only, 1))
     fallback = F.coalesce(best_full["country_id"], F.lit(NO_MATCH))
@@ -191,7 +185,7 @@ def _resolve_candidates(joined: DataFrame) -> DataFrame:
         joined.withColumn("_fallback", fallback)
         .withColumn("_contender_ids", F.transform(contenders, lambda c: c["country_id"]))
         .withColumn("n_candidates", F.coalesce(F.size("cands"), F.lit(0)))
-        .withColumn("refined", F.col("lat").isNotNull() & (F.size("_contender_ids") > 0))
+        .withColumn("refined", F.size("_contender_ids") > 0)
     )
 
 
@@ -295,7 +289,8 @@ def assign_countries_distributed(
       bounded by points-per-boundary-cell (area-bounded), not
       points-per-country — the reference's USA problem cannot recur
       (bin/lib/functionsProcess.sh:2496-2690 chunks by id to dodge it;
-      here the key itself is fine-grained).
+      here the key itself is fine-grained). The refine runs
+      `defaultParallelism` tasks, whatever the shuffle's size.
 
     Parity with the broadcast path: clipped-fragment PIP equals
     whole-polygon PIP for lattice points strictly inside the grown cell
@@ -309,10 +304,7 @@ def assign_countries_distributed(
         F.col(id_col).alias("id"),
         F.col(lat_col).alias("lat"),
         F.col(lon_col).alias("lon"),
-    ).withColumn(
-        "cell",
-        F.when(F.col("lat").isNotNull(), cell_col(F.col("lat"), F.col("lon"), level)),
-    )
+    ).withColumn("cell", cell_col(F.col("lat"), F.col("lon"), level))
     resolved = _resolve_candidates(
         pts.join(F.broadcast(candidates_from_cover(cover)), "cell", "left")
     ).localCheckpoint(eager=True)
@@ -329,10 +321,16 @@ def assign_countries_distributed(
         "refined",
     )
 
+    # both sides hash by cell into one partition per core: AQE would
+    # coalesce this small shuffle by bytes into one task, while the
+    # stage's cost is Python PIP time per refined point. AQE keeps a
+    # repartition's partition count, and the cogroup reuses the
+    # partitioning without another exchange
+    n_parts = spark.sparkContext.defaultParallelism
     need = resolved.where(F.col("refined")).select(
         "id", "lat", "lon", "cell", "_contender_ids", "_fallback", "n_candidates"
-    )
-    frags = cover.where(~F.col("full")).select("cell", "country_id", "frag")
+    ).repartition(n_parts, "cell")
+    frags = cover.where(~F.col("full")).select("cell", "country_id", "frag").repartition(n_parts, "cell")
 
     out_ddl = "id long, lat double, lon double, cell long, country_id long, n_candidates int, refined boolean"
     out_schema = pa.schema([
@@ -379,69 +377,3 @@ def assign_countries_distributed(
         "id", "lat", "lon", "cell", "country_id", F.col("n_candidates").cast("int"), "refined"
     ).unionByName(slow)
 
-
-def assign_countries_partitioned(
-    spark: SparkSession,
-    points: DataFrame,
-    index: PolygonIndex,
-    salt_buckets: int = 8,
-    id_col: str = "id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
-    """Salted shuffle variant → (id, lat, lon, cell, country_id) for
-    points with a lat.
-
-    Hot cells (skew — the reference's USA/Germany problem,
-    sql/functionsProcess_31_organizeAreas_2DGrid.sql:26-42) are split by
-    an explicit salt, with AQE skew-join splitting as the backstop: the
-    priority-sorted candidate lists (`candidates_from_cover`) explode
-    ×salt_buckets and left-join the points on (cell, salt), the point's
-    salt being pmod(hash(id)), so each (cell, salt) pair co-locates with
-    a slice of a hot cell's points. Winners resolve as in the
-    distributed path: `_resolve_candidates` in the JVM, then one
-    mapInArrow runs `_first_contained_winner` against the broadcast
-    PolygonPack.
-
-    Geometry still lives on the driver: the PolygonPack is broadcast,
-    and so are the candidates while they fit under the 64 MB broadcast
-    threshold (then the points do not shuffle at all). Only
-    `assign_countries_distributed` keeps the dimension off the driver.
-    """
-    cands = candidates_from_cover(cover_df(spark, index)).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    pts = (
-        points.select(
-            F.col(id_col).alias("id"), F.col(lat_col).alias("lat"), F.col(lon_col).alias("lon")
-        )
-        .where(F.col("lat").isNotNull())
-        .withColumn("cell", cell_col(F.col("lat"), F.col("lon"), index.level))
-        .withColumn("salt", (F.pmod(F.hash("id"), F.lit(salt_buckets))).cast("int"))
-    )
-    resolved = _resolve_candidates(pts.join(cands, ["cell", "salt"], "left")).select(
-        "id", "lat", "lon", "cell", "_contender_ids", "_fallback"
-    )
-    schema = T.StructType(
-        resolved.schema.fields[:4] + [T.StructField("country_id", T.LongType(), False)]
-    )
-    bc = spark.sparkContext.broadcast(index.pack)
-
-    def refine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pk: PolygonPack = bc.value
-        idx_of = pk.index_of_id()
-
-        def contains_fn(cid: int, lons: np.ndarray, lats: np.ndarray) -> np.ndarray:
-            return pk.contains(idx_of[cid], lons, lats)
-
-        for b in batches:
-            best = _first_contained_winner(
-                pc.cast(b.column("lon"), pa.float64()).to_numpy(zero_copy_only=False),
-                pc.cast(b.column("lat"), pa.float64()).to_numpy(zero_copy_only=False),
-                b.column("_contender_ids"),
-                b.column("_fallback").to_numpy(zero_copy_only=False),
-                contains_fn,
-            )
-            yield pa.RecordBatch.from_arrays(b.columns[:4] + [pa.array(best)], names=schema.fieldNames())
-
-    return resolved.mapInArrow(refine, schema)

@@ -461,15 +461,17 @@ FROM pts WHERE u < 90000"""
 
 
 def q_assign_country_salted(spark, sf_dir):
-    """The explicit shuffle+salt variant (assign_countries_partitioned) —
-    same oracle as the broadcast path; pins that skew handling doesn't
-    change semantics. Only coord-bearing pages (the variant's domain)."""
-    from ..operators.spatial_join import assign_countries_partitioned
+    """The skew leg of the shuffle-side path (assign_countries_distributed)
+    at level 7, where its cogroup refine gets ~4x the boundary-cell
+    points it gets at level 9 — same oracle as the broadcast path; pins
+    that the refine's partitioning doesn't change semantics. Only
+    coord-bearing pages."""
+    from ..operators.spatial_join import assign_countries_distributed
+    from ..sources.polygons import prep_polygons_distributed, ring_rows_df
 
     ext = _extracted(spark, sf_dir).where(F.col("has_coords"))
-    return assign_countries_partitioned(spark, ext, _index(), salt_buckets=4).select(
-        "id", "country_id"
-    )
+    cover = prep_polygons_distributed(spark, ring_rows_df(spark, world_polygons()), level=7)
+    return assign_countries_distributed(spark, ext, cover, level=7).select("id", "country_id")
 
 
 SQL_ASSIGN_SALTED = f"""{_PTS_CTE}

@@ -79,31 +79,6 @@ def prep_polygons(
     )
 
 
-_CAND_SCHEMA = T.StructType(
-    [
-        T.StructField("cell", T.LongType(), False),
-        T.StructField("priority", T.LongType(), False),
-        T.StructField("country_id", T.LongType(), False),
-        T.StructField("full", T.BooleanType(), False),
-    ]
-)
-
-
-def cover_df(spark: SparkSession, index: PolygonIndex) -> DataFrame:
-    """Flat (cell, priority, country_id, full) cover table."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "cell": index.cells,
-            "priority": index.priorities,
-            "country_id": index.country_ids,
-            "full": index.fulls,
-        }
-    )
-    return spark.createDataFrame(pdf, schema=_CAND_SCHEMA)
-
-
 # ------------------------------------------------------- distributed prep
 #
 # The driver path above collects rings and builds quadtree covers in a
@@ -276,8 +251,9 @@ def prep_polygons_distributed(
 def candidates_from_cover(cover: DataFrame) -> DataFrame:
     """cell → priority-sorted candidate array, as a Spark aggregation
     (the shuffle-side twin of `_CoverLookup`'s driver-side numpy sort).
-    One shuffle at PREP time; both shuffle-side assignment paths
-    (operators/spatial_join) join the points against the result."""
+    One shuffle at PREP time; the shuffle-side assignment path
+    (operators/spatial_join.assign_countries_distributed) joins the
+    points against the result."""
     return cover.groupBy("cell").agg(
         F.sort_array(F.collect_list(F.struct("priority", "country_id", "full"))).alias("cands")
     )

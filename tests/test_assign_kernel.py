@@ -1,6 +1,6 @@
 """The assignment kernel's output contract, on both entry points:
 assign_countries and fused_extract_assign (one mapInArrow each); and the
-shuffle-side paths' shared winner pick, _first_contained_winner."""
+shuffle-side path's winner pick, _first_contained_winner."""
 
 from __future__ import annotations
 
@@ -17,15 +17,22 @@ from osm_notes_ingestion_spark.operators.spatial_join import (
     NO_MATCH,
     _first_contained_winner,
     assign_countries,
+    assign_countries_distributed,
 )
-from osm_notes_ingestion_spark.sources.polygons import prep_polygons
+from osm_notes_ingestion_spark.sources.polygons import (
+    prep_polygons,
+    prep_polygons_distributed,
+    ring_rows_df,
+)
 from osm_notes_ingestion_spark.sources.synth import pages_df, world_polygons
 
 
 def test_null_coordinates_and_keep_cols(spark):
     """Null lat → NULL cell and country_id; lat without lon → NULL cell,
     NO_MATCH; keep columns (any type) pass through untouched; the cell is
-    the JVM encoder's."""
+    the JVM encoder's. The distributed path gives the same (cell,
+    country_id) on every row: a NULL lon must not clamp to grid column 0
+    (lat 0.5 there lies in Wrapland)."""
     index = prep_polygons(world_polygons(), level=7)
     ts = dt.datetime(2024, 1, 2, 3, 4, 5)
     pts = spark.createDataFrame(
@@ -34,6 +41,7 @@ def test_null_coordinates_and_keep_cols(spark):
             (2, "b", None, None, None),
             (3, None, ts, 10.0, None),
             (4, "d", ts, -0.5, -150.0),
+            (5, "e", ts, 0.5, None),
         ],
         "pid long, tag string, seen timestamp, y double, x double",
     )
@@ -45,11 +53,19 @@ def test_null_coordinates_and_keep_cols(spark):
     ]
     got = {r.id: r for r in out.withColumn("jvm_cell", cell_col(F.col("lat"), F.col("lon"), 7)).collect()}
     assert (got[1].tag, got[1].seen, got[3].tag, got[2].seen) == ("a", ts, None, None)
-    for i in (1, 4):
+    for i in got:
         assert got[i].cell == got[i].jvm_cell
+    for i in (1, 4):
         assert got[i].country_id is not None
     assert (got[2].cell, got[2].country_id, got[2].n_candidates, got[2].refined) == (None, None, 0, False)
-    assert (got[3].cell, got[3].country_id, got[3].n_candidates, got[3].refined) == (None, NO_MATCH, 0, False)
+    for i in (3, 5):
+        assert (got[i].cell, got[i].country_id, got[i].n_candidates, got[i].refined) == (None, NO_MATCH, 0, False)
+
+    cover = prep_polygons_distributed(spark, ring_rows_df(spark, world_polygons()), level=7)
+    dist = assign_countries_distributed(spark, pts, cover, level=7, id_col="pid", lat_col="y", lon_col="x")
+    assert {r.id: (r.cell, r.country_id) for r in dist.collect()} == {
+        i: (r.cell, r.country_id) for i, r in got.items()
+    }
 
 
 def test_fused_cell_equals_assign_cell(spark, sf_dir):

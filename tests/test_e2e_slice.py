@@ -15,9 +15,13 @@ from osm_notes_ingestion_spark.functions.geometry import PolygonPack, points_in_
 from osm_notes_ingestion_spark.operators.extract import extract_pages
 from osm_notes_ingestion_spark.operators.spatial_join import (
     assign_countries,
-    assign_countries_partitioned,
+    assign_countries_distributed,
 )
-from osm_notes_ingestion_spark.sources.polygons import prep_polygons
+from osm_notes_ingestion_spark.sources.polygons import (
+    prep_polygons,
+    prep_polygons_distributed,
+    ring_rows_df,
+)
 from osm_notes_ingestion_spark.sources.synth import pages_df, world_polygons
 
 
@@ -102,24 +106,15 @@ def test_assignment_matches_brute_force(spark, extracted):
 
 
 def test_partitioned_variant_agrees(spark, extracted):
+    """The cell-partitioned distributed path equals the broadcast path
+    at level 7 on every located page."""
     polys = world_polygons()
     index = prep_polygons(polys, level=7)
-    broadcast_res = (
-        assign_countries(spark, extracted, index)
-        .where(F.col("lat").isNotNull())
-        .select("id", "country_id")
-        .toPandas()
-        .set_index("id")
-        .sort_index()
-    )
-    part_res = (
-        assign_countries_partitioned(spark, extracted, index, salt_buckets=4)
-        .select("id", "country_id")
-        .toPandas()
-        .set_index("id")
-        .sort_index()
-    )
-    assert (broadcast_res["country_id"].values == part_res["country_id"].values).all()
+    located = extracted.where(F.col("lat").isNotNull())
+    want = {r.id: r.country_id for r in assign_countries(spark, located, index).collect()}
+    cover = prep_polygons_distributed(spark, ring_rows_df(spark, polys), level=7)
+    got = {r.id: r.country_id for r in assign_countries_distributed(spark, located, cover, level=7).collect()}
+    assert len(want) > 0 and got == want
 
 
 def test_pip_edge_conventions():

@@ -201,51 +201,37 @@ def test_ivf_probe_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_salted_refine_groups_candidates_per_point(spark, sf_dir):
-    """Per-point refinement in the salted variant: the JVM resolves each
-    point's candidate list (`_resolve_candidates`), and ONE MapInArrow
-    refine reads the per-point contender list — a point with k partial
-    candidates crosses Arrow once, not k times. No pandas UDF, no branch
-    union, no aggregation joined back by id."""
+def test_distributed_refine_keeps_parallelism(spark, sf_dir):
+    """The distributed path's cell-local refine: the JVM resolves each
+    point's candidate list (`_resolve_candidates`), and ONE cogroup
+    refine reads the per-point contender list, so a point with k partial
+    candidates crosses Arrow once, not k times. Both cogroup inputs hash
+    by cell to a fixed partition count, and AQE must not coalesce them
+    into one task after they run (a small shuffle holding the stage's
+    Python PIP time). No pandas UDF, no sort-merge join."""
     from osm_notes_ingestion_spark.operators.spatial_join import (
-        assign_countries_partitioned,
+        assign_countries_distributed,
+    )
+    from osm_notes_ingestion_spark.sources.polygons import (
+        prep_polygons_distributed,
+        ring_rows_df,
     )
 
-    spark.catalog.clearCache()
-    index = prep_polygons(world_polygons(), level=7)
-    df = assign_countries_partitioned(
-        spark, extract_pages(pages_df(spark, sf_dir)), index
+    cover = prep_polygons_distributed(spark, ring_rows_df(spark, world_polygons()), level=7)
+    df = assign_countries_distributed(
+        spark, extract_pages(pages_df(spark, sf_dir)), cover, level=7
     )
+    df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow refine(") == 1, plan
-    refine_args = plan[plan.index("MapInArrow refine(") :].split("\n", 1)[0]
-    assert "_contender_ids" in refine_args, "refine must read the per-point contender list"
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FlatMapCoGroupsInArrow") == 1, final
+    refine = final[final.index("FlatMapCoGroupsInArrow") :].split("\n", 1)[0]
+    assert "refine_cell(" in refine and "_contender_ids" in refine, refine
+    assert "coalesced" not in final, final
+    exchanges = [ln for ln in final.splitlines() if "Exchange " in ln]
+    assert len(exchanges) == 2 and all("REPARTITION_BY_NUM" in ln for ln in exchanges), final
     assert "ArrowEvalPython" not in plan
-    assert "Union" not in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_salted_equals_broadcast_path(spark, sf_dir):
-    """Winner semantics of the restructured salted path == the broadcast
-    path, on real extracted points (incl. multi-candidate boundary
-    points)."""
-    from osm_notes_ingestion_spark.operators.spatial_join import (
-        assign_countries_partitioned,
-    )
-
-    index = prep_polygons(world_polygons(), level=7)
-    pts = extract_pages(pages_df(spark, sf_dir)).where(F.col("has_coords"))
-    want = {
-        r.id: r.country_id
-        for r in assign_countries(spark, pts, index).select("id", "country_id").collect()
-    }
-    got = {
-        r.id: r.country_id
-        for r in assign_countries_partitioned(spark, pts, index)
-        .select("id", "country_id")
-        .collect()
-    }
-    assert got == want
 
 
 def test_array_minhash_bands_have_no_exchange(spark):
