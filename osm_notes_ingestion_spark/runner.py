@@ -23,6 +23,18 @@ Jobs:
     incremental — watermark-bounded batch into the snapshot store
 
 Writes parquet outputs under --output and metrics under --output/metrics.
+
+Cold start: the spark-submit JVM starts before any Python runs, so this
+session cannot add the class-data-sharing archive `session.get_spark`
+builds under the checkout's `.cds/`. Pass it on the command line, with
+the empty conf dir it was built with (JDK 17 refuses an archive while a
+non-empty directory is on the classpath, and Spark puts its conf dir
+there); a missing or mismatched archive starts the JVM normally:
+
+    SPARK_CONF_DIR=$PWD/.cds/conf spark-submit \
+        --driver-java-options "-XX:SharedArchiveFile=$(ls -t $PWD/.cds/driver-*.jsa | head -1) -Xlog:disable -Xlog:all=warning:stderr" \
+        --master local[4] --py-files osm_notes_ingestion_spark.zip \
+        submit_job.py --job incremental --sf-dir /root/testdata/sf0.001 --output /tmp/out
 """
 
 from __future__ import annotations
